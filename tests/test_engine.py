@@ -3217,3 +3217,77 @@ def test_concurrent_mixed_verbs_invariants(engine, spark):
     assert len(cur_rows) == 1
     assert cur_rows[0]["version"] == max(r["version"] for r in hist)
     assert cur_rows[0]["retained"]
+
+
+def _vectors_2000x8(engine, reindex_arg=None):
+    """CREATE + INSERT 2000 seeded 8-d vectors (payload ``doc<i>``) and
+    REINDEX them; returns the numpy matrix."""
+    import numpy as np
+
+    engine.execute("CREATE", collection="v", arg={"dimension": 8})
+    x = np.random.default_rng(0).standard_normal((2000, 8))
+    engine.execute("INSERT", collection="v", arg=[
+        {"id": i, "embedding": v.tolist(), "payload": f"doc{i}"}
+        for i, v in enumerate(x)
+    ])
+    engine.execute("REINDEX", collection="v", arg=reindex_arg)
+    assert engine.db.collection("v").live_index() is not None
+    return x
+
+
+@pytest.mark.parametrize("hook", ["read", "live_index"])
+def test_searchsimilar_survives_a_commit_during_planning(engine, monkeypatch, hook):
+    """A DELETE that commits while SEARCHSIMILAR is being planned must not
+    fail the search: it scans the snapshot it resolved (COW versions are
+    immutable until TRUNCATEWAL) and returns either the pre-commit top-k
+    or the post-commit exact top-k. Two injection points: inside
+    ``Collection.read`` (the planning scan) and right after the version
+    and its index are resolved (``Collection.live_index``)."""
+    from vrod_spark import catalog
+
+    x = _vectors_2000x8(engine)
+    query = {"vector": x[1].tolist(), "k": 10}
+
+    def top(rows):
+        return [(r["id"], round(r["dist"], 9)) for r in rows]
+
+    before = top(engine.execute("SEARCHSIMILAR", collection="v", arg=query).df.collect())
+    assert before[0][0] == 1
+
+    original = getattr(catalog.Collection, hook)
+    fired = []
+
+    def commit_after(self, *a, **kw):
+        out = original(self, *a, **kw)
+        if not fired:
+            fired.append(True)
+            engine.execute("DELETE", collection="v", arg=[1])
+        return out
+
+    monkeypatch.setattr(catalog.Collection, hook, commit_after)
+    got = top(engine.execute("SEARCHSIMILAR", collection="v", arg=query).df.collect())
+    monkeypatch.undo()
+    assert fired, f"the {hook} hook never ran"
+    col = engine.db.collection("v")
+    assert col.live_index() is None  # the DELETE's rewrite cleared the index
+    after = top(engine.execute("SEARCHSIMILAR", collection="v", arg=query).df.collect())
+    assert after[0][0] != 1
+    assert got in (before, after)
+
+
+@pytest.mark.parametrize("reindex_arg", [None, {"kind": "ivf", "n_centroids": 16}])
+def test_prefiltered_searchsimilar_on_lsh_and_ivf_returns_k_rows(engine, reindex_arg):
+    """A ``where``-prefiltered SEARCHSIMILAR on a sign-LSH or IVF index must
+    return k rows when k matching rows are live: bucket probes are sized
+    from the unfiltered histogram, so a selective prefilter inside them
+    came back short (1, 9 or 4 of 10). It returns the exact top-k over the
+    prefiltered snapshot."""
+    x = _vectors_2000x8(engine, reindex_arg)
+    col = engine.db.collection("v")
+    rows = engine.execute("SEARCHSIMILAR", collection="v", arg={
+        "vector": x[1].tolist(), "k": 10, "where": "id % 50 = 0"}).df.collect()
+    assert len(rows) == 10
+    assert all(r["id"] % 50 == 0 for r in rows)
+    exact = knn_exact(col.read().filter("id % 50 = 0"), x[1].tolist(), 10,
+                      vec_col="embedding", id_col="id").collect()
+    assert [r["id"] for r in rows] == [r["id"] for r in exact]

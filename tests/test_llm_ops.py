@@ -3391,9 +3391,15 @@ def test_worker_closures_pickle_by_value():
             "_gif_frames_parser", "_jpeg_decoder", "_wav_parser",
             "_au_parser", "_y4m_parser", "_avi_mjpeg_container",
             "_mp1_parser", "_mp2_parser", "_mp3_parser",
+            "_image_decoder", "_audio_decoder",
         )
     }
     closures["_h264_decoder"] = M._h264_decoder(with_chroma=True)
+    decode_image, _ = M._image_decoder()
+    closures["_stage_worker"] = M._stage_worker(
+        lambda b: [decode_image(b)[:3]],
+        "media_id bigint, format string, width int, height int",
+    )
     payload = {
         k: base64.b64encode(cloudpickle.dumps(v)).decode()
         for k, v in closures.items()

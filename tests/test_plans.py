@@ -296,77 +296,6 @@ def test_shared_jaccard_graph_is_one_materialization(spark, sf_dir):
     assert "BroadcastExchange" not in uplan
 
 
-def test_shared_cached_build_pool_is_opt_in(spark, monkeypatch):
-    """_shared_cached must leave the caller's scheduler pool untouched by
-    default (the weighted vrod_build pool regressed the shared-JVM
-    concurrent suite — r16 A/B), and with VROD_BUILD_POOL set it must run
-    the build in that pool and restore the caller's pool afterwards."""
-    from vrod_spark.queries import _shared_cached
-
-    sc = spark.sparkContext
-    seen = {}
-
-    def probe():
-        seen["pool"] = sc.getLocalProperty("spark.scheduler.pool")
-        return object()
-
-    monkeypatch.delenv("VROD_BUILD_POOL", raising=False)
-    sc.setLocalProperty("spark.scheduler.pool", None)
-    _shared_cached(spark, ("__pool_gate_test__", "off"), probe)
-    assert seen["pool"] is None  # default: no pool override
-
-    monkeypatch.setenv("VROD_BUILD_POOL", "vrod_build")
-    sc.setLocalProperty("spark.scheduler.pool", "caller_pool")
-    try:
-        _shared_cached(spark, ("__pool_gate_test__", "on"), probe)
-        assert seen["pool"] == "vrod_build"  # opted-in build pool
-        # ... and the caller's own pool is restored after the build.
-        assert sc.getLocalProperty("spark.scheduler.pool") == "caller_pool"
-    finally:
-        sc.setLocalProperty("spark.scheduler.pool", None)
-
-
-def test_build_fanout_gate_is_opt_in_and_reentrant(monkeypatch):
-    """The materialization-build fan-out cap (VROD_BUILD_FANOUT) must be
-    inert by default (the cap read WORSE on pass-1 in the r17 interleaved
-    A/B — same negative-result family as the r16 FAIR pool), bound
-    concurrency when opted in, and never self-deadlock a build that
-    resolves another shared asset on the same thread (reentrancy)."""
-    import threading
-
-    from vrod_spark.queries import _BUILD_GATE, _build_slot
-
-    monkeypatch.delenv("VROD_BUILD_FANOUT", raising=False)
-    import contextlib
-
-    assert isinstance(_build_slot(), contextlib.nullcontext)  # default: inert
-
-    monkeypatch.setenv("VROD_BUILD_FANOUT", "1")
-    peak = {"n": 0, "cur": 0}
-    lock = threading.Lock()
-
-    def build(depth: int):
-        with _build_slot():
-            with lock:
-                peak["cur"] += 1
-                peak["n"] = max(peak["n"], peak["cur"])
-            if depth:
-                build(depth - 1)  # nested resolve: must not deadlock at cap 1
-            with lock:
-                peak["cur"] -= 1
-
-    threads = [threading.Thread(target=build, args=(1,)) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=30)
-    assert not any(t.is_alive() for t in threads)
-    # cap honored per thread-family (nested re-entry shares the slot,
-    # so the nested call does not count as a second holder).
-    assert peak["n"] <= 2
-    assert getattr(_BUILD_GATE, "held", False) is False
-
-
 def test_shared_doc_tokens_is_one_materialization_and_complete(spark, sf_dir):
     """The tokenize-once snapshot (q53's three legs): same session+snapshot
     returns the identical checkpointed DataFrame; EVERY document row is

@@ -334,8 +334,11 @@ class Collection:
                 out.add(v)
         return out
 
-    def live_index(self, meta: dict | None = None) -> dict | None:
-        """The index dict consumers may TRUST, or None.
+    def live_index(
+        self, meta: dict | None = None, version: int | None = None
+    ) -> dict | None:
+        """The index dict consumers may TRUST for snapshot ``version`` (the
+        CURRENT one by default), or None.
 
         ``meta['index']`` alone is not proof the index is live: REINDEX's
         commit tail writes the index meta BEFORE the _CURRENT pointer
@@ -352,6 +355,8 @@ class Collection:
         stale index meta is permanently inert — readers fall back to the
         exact paths until a REINDEX re-runs or TRUNCATEWAL clears it.
         Stamp-less index meta (pre-r14 collections) is trusted as live.
+        A stamp newer than ``version`` indexes a later snapshot, never this
+        one.
         """
         idx = (meta if meta is not None else self.meta).get("index")
         if not idx:
@@ -359,14 +364,31 @@ class Collection:
         v = idx.get("version")
         if v is None:
             return idx
-        # Fast path: a stamp equal to the CURRENT pointer is committed by
+        current = self.version if version is None else version
+        # Fast path: a stamp equal to a pointer value is committed by
         # definition (the pointer only ever names committed snapshots) —
         # skips the O(commits) WAL parse for the common just-reindexed
         # state; older stamps (appends since) pay one wal.jsonl read,
         # bounded by TRUNCATEWAL compaction.
-        if int(v) == self.version:
+        if int(v) == current:
             return idx
+        if int(v) > current:
+            return None
         return idx if int(v) in self.committed_versions() else None
+
+    def snapshot(self) -> tuple[int, dict, dict | None]:
+        """``(version, meta, live index)`` of the CURRENT snapshot, resolved
+        once for a reader that plans against it (SEARCHSIMILAR routes on
+        it and its searchers scan that version). The pointer is read
+        BEFORE the meta: every commit that changes the index meta does so
+        before its pointer swap, so a rewrite's cleared index reads as
+        none (the exact path over ``version`` is right for any layout) and
+        a REINDEX stamped after ``version`` is not trusted for it. A
+        commit landing while the reader plans cannot disturb it: COW
+        versions stay immutable until TRUNCATEWAL."""
+        version = self.version
+        meta = self.meta
+        return version, meta, self.live_index(meta, version)
 
     def read(self, version: int | None = None, *, spark: SparkSession | None = None) -> DataFrame:
         """Read a committed snapshot — the CURRENT one by default, or a
@@ -634,10 +656,11 @@ class Collection:
                         .parquet(staging)
                     )
                 else:
-                    # One task per known bucket when the histogram is
-                    # available (r17, the ann.py reindex rationale): AQE
-                    # otherwise coalesces the post-shuffle partitions and
-                    # a single task writes every partition file serially.
+                    # Roughly one task per known bucket (hash
+                    # partitioning) when the histogram is available (r17,
+                    # the ann.py reindex rationale): AQE otherwise
+                    # coalesces the post-shuffle partitions and a single
+                    # task writes every partition file serially.
                     n_buckets = len(idx.get("histogram") or {})
                     (
                         (

@@ -916,12 +916,11 @@ class Engine:
             bm = bm25_rank(
                 base, terms, text_col="payload", id_col="id", top_k=list_k
             ).select("id", "rank")
-            # The vector list DELEGATES to SEARCHSIMILAR: a REINDEXed
-            # collection probes its LSH/IVF/PQ index instead of brute-
-            # forcing, the collection's declared metric defines
-            # similarity, and dimension validation comes free — the
-            # 100 TB hybrid shape (first-stage candidates from the
-            # index, fusion over k-sized lists).
+            # The vector list DELEGATES to SEARCHSIMILAR: the collection's
+            # declared metric defines similarity and dimension validation
+            # comes free. The list is prefiltered, so a PQ index probes
+            # while LSH/IVF collections take the exact scan, which keeps
+            # the list k-sized (fusion over k-sized lists).
             vspec: dict[str, Any] = {
                 "vector": [float(x) for x in qvec],
                 "k": list_k,
@@ -1125,13 +1124,17 @@ class Engine:
             for knob in ("candidate_factor", "rescore_factor"):
                 if spec.get(knob) is not None:
                     tuning[knob] = int(spec[knob])
-        meta = col.meta
+        # One snapshot for the whole plan: routing and the index searchers
+        # scan the version resolved here, so a commit landing meanwhile
+        # cannot pull the index out from under them (Collection.snapshot).
+        snapshot = col.snapshot()
+        version, meta, live_idx = snapshot
         declared = meta.get("dimension")
         if declared is not None and len(vector) != declared:
             raise DimensionMismatchError(
                 f"query vector dimension {len(vector)} != collection dimension {declared}"
             )
-        df = col.read()
+        df = col.read(version)
         if where:
             df = df.filter(F.expr(where))
         if within is not None:
@@ -1148,24 +1151,29 @@ class Engine:
                 limit=int(spec["k"]) if isinstance(spec, dict) and "k" in spec else None,
             )
             return CommandResult("SEARCHSIMILAR", df=result)
-        live_idx = col.live_index(meta)
-        if live_idx:
-            kind = live_idx.get("kind")
+        kind = live_idx.get("kind") if live_idx else None
+        if kind in ("pq", "ivfpq"):
+            # PQ applies the prefilter before choosing its ADC candidates.
+            from vrod_spark.operators.pq import pq_collection_search
+
+            opts = {"rescore_factor": tuning["rescore_factor"]} if "rescore_factor" in tuning else {}
+            result = pq_collection_search(
+                col, vector, k, prefilter=where, snapshot=snapshot, **opts
+            )
+            return CommandResult("SEARCHSIMILAR", df=result)
+        if live_idx and not where:
+            # Sign-LSH and IVF size their probe from the UNFILTERED bucket
+            # histogram, so a prefiltered search takes the exact path over
+            # the prefiltered snapshot below (else it returns < k rows).
+            opts = {"candidate_factor": tuning["candidate_factor"]} if "candidate_factor" in tuning else {}
             if kind == "ivf":
                 from vrod_spark.operators.ivf import ivf_search
 
-                opts = {"candidate_factor": tuning["candidate_factor"]} if "candidate_factor" in tuning else {}
-                result = ivf_search(col, vector, k, prefilter=where, **opts)
-            elif kind in ("pq", "ivfpq"):
-                from vrod_spark.operators.pq import pq_collection_search
-
-                opts = {"rescore_factor": tuning["rescore_factor"]} if "rescore_factor" in tuning else {}
-                result = pq_collection_search(col, vector, k, prefilter=where, **opts)
+                result = ivf_search(col, vector, k, snapshot=snapshot, **opts)
             else:
                 from vrod_spark.operators.ann import ann_search_bucketed
 
-                opts = {"candidate_factor": tuning["candidate_factor"]} if "candidate_factor" in tuning else {}
-                result = ann_search_bucketed(col, vector, k, prefilter=where, **opts)
+                result = ann_search_bucketed(col, vector, k, snapshot=snapshot, **opts)
             return CommandResult("SEARCHSIMILAR", df=result)
         result = knn_exact(
             df,

@@ -111,15 +111,16 @@ def reindex_collection(collection, *, n_planes: int = DEFAULT_PLANES, seed: int 
     try:
         # Cluster rows physically by bucket; partitionBy gives one
         # directory per bucket → partition pruning serves bucket scans.
-        # Explicit numPartitions = 2^n_planes (one task per bucket, r17):
-        # a keyless repartition("bucket") lets AQE coalesce the tiny
-        # post-shuffle partitions into one or two tasks, which then write
-        # all 2^n_planes partition files SEQUENTIALLY — measured 4.4-5.2 s
-        # vs 1.4-1.8 s for the pinned count at sf0.1/local[32], identical
-        # 256 files (guide §2.6 idle capacity). At scale one task per
-        # bucket is the natural write shape for a bucket-partitioned
-        # snapshot; installations with huge per-bucket volumes raise
-        # n_planes (scan cost is O(N / 2^planes), so buckets stay
+        # Explicit numPartitions = 2^n_planes (r17): a keyless
+        # repartition("bucket") lets AQE coalesce the tiny post-shuffle
+        # partitions into one or two tasks, which then write all
+        # 2^n_planes partition files SEQUENTIALLY — measured 4.4-5.2 s vs
+        # 1.4-1.8 s for the pinned count at sf0.1/local[32], identical 256
+        # files (guide §2.6 idle capacity). repartition(n, "bucket") HASH
+        # partitions, so that is roughly one task per bucket, not exactly
+        # one: hash collisions put two buckets in one task and leave
+        # another task empty. Installations with huge per-bucket volumes
+        # raise n_planes (scan cost is O(N / 2^planes), so buckets stay
         # bounded).
         (
             df.repartition(1 << n_planes, "bucket")
@@ -210,28 +211,24 @@ def candidate_buckets(
 
 
 def ann_search_bucketed(
-    collection, vector: list[float], k: int, *, prefilter: str | None = None,
-    candidate_factor: int = 8,
+    collection, vector: list[float], k: int, *, candidate_factor: int = 8,
+    snapshot: tuple | None = None,
 ) -> DataFrame:
-    """LSH fast path: prune to candidate buckets, exact-score, top-k."""
-    index_meta = collection.live_index()
-    if index_meta is None:
-        raise RuntimeError(
-            f"{collection.name}: no live index (missing, or its commit "
-            "never became visible — re-run REINDEX)"
-        )
+    """LSH fast path: prune to candidate buckets, exact-score, top-k.
+    Scans ``snapshot`` = ``(version, meta, live index)``
+    (``Collection.snapshot()``, the current one by default), which must
+    carry a live sign-LSH index."""
+    version, meta, index_meta = snapshot or collection.snapshot()
     buckets = candidate_buckets(index_meta, vector, k, candidate_factor)
-    df = collection.db.spark.read.parquet(collection.version_dir())
+    df = collection.db.spark.read.parquet(collection.version_dir(version))
     df = df.filter(F.col("bucket").isin(buckets))  # → partition pruning
-    if prefilter:
-        df = df.filter(F.expr(prefilter))
     return knn_exact(
         df,
         vector,
         k,
         vec_col="embedding",
         id_col="id",
-        metric=collection.meta.get("metric", "l2"),
+        metric=meta.get("metric", "l2"),
         payload_cols=("payload",),
     )
 

@@ -156,8 +156,11 @@ def jaccard_pairs(
     # consumers of the postings shuffle plus a 27K-row keep-side shuffle
     # at sf0.1; static plan 18 → 10 Exchange nodes, rows bit-identical —
     # guide §2.4 "two operations keyed the same way share one exchange").
-    # Per-shingle row counts are bounded by max_shingle_df ↠ the window
-    # partition is never the skew risk the unpruned join itself has.
+    # The window counts a shingle's WHOLE posting list, BEFORE the df-cap
+    # filter, and WindowExec buffers that list per group: a stop-shingle
+    # with document frequency ≈ N makes one task buffer (or spill) ≈ N
+    # rows. max_shingle_df bounds what reaches the pair join, not this
+    # window, whose envelope is the largest posting list.
     w = Window.partitionBy("shingle")
     pruned = (
         inv.withColumn("_df", F.count(F.lit(1)).over(w))
@@ -331,7 +334,9 @@ def winnow_overlap_pairs(
     # aggregate + join back, and count(*) over (partition by fp) rides
     # the hashpartitioning(fp) exchange the pair join needs anyway,
     # replacing the groupBy(fp) aggregate + left-semi join (guide §2.4).
-    # Rows bit-identical; the df cap bounds per-fp window partitions.
+    # Rows bit-identical. The per-fp window buffers the fp's whole posting
+    # list before the df cap filters it, so a hot fp costs one task its
+    # full df in rows; max_fp_df bounds only the pair join.
     df_cond = F.col("_df") >= 2
     if max_fp_df is not None:
         df_cond = df_cond & (F.col("_df") <= max_fp_df)

@@ -155,9 +155,10 @@ def reindex_ivf(
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
         (
-            # One task per centroid bucket (r17, the ann.py rationale):
-            # AQE otherwise coalesces the tiny post-shuffle partitions
-            # and one task writes every partition file sequentially.
+            # Roughly one task per centroid bucket (hash partitioning;
+            # r17, the ann.py rationale): AQE otherwise coalesces the tiny
+            # post-shuffle partitions and one task writes every partition
+            # file sequentially.
             bucketed.repartition(len(centroids), "bucket")
             .sortWithinPartitions("bucket", "id")
             .write.partitionBy("bucket")
@@ -223,27 +224,23 @@ def ivf_candidate_buckets(
 
 
 def ivf_search(
-    collection, vector: list[float], k: int, *, prefilter: str | None = None,
-    candidate_factor: int = 8,
+    collection, vector: list[float], k: int, *, candidate_factor: int = 8,
+    snapshot: tuple | None = None,
 ) -> DataFrame:
-    """Probe nearest centroids (partition-pruned scan) then exact-score."""
-    index_meta = collection.live_index()
-    if index_meta is None:
-        raise RuntimeError(
-            f"{collection.name}: no live index (missing, or its commit "
-            "never became visible — re-run REINDEX)"
-        )
+    """Probe nearest centroids (partition-pruned scan) then exact-score.
+    Scans ``snapshot`` = ``(version, meta, live index)``
+    (``Collection.snapshot()``, the current one by default), which must
+    carry a live IVF index."""
+    version, meta, index_meta = snapshot or collection.snapshot()
     buckets = ivf_candidate_buckets(index_meta, vector, k, candidate_factor)
-    df = collection.db.spark.read.parquet(collection.version_dir())
+    df = collection.db.spark.read.parquet(collection.version_dir(version))
     df = df.filter(F.col("bucket").isin(buckets))
-    if prefilter:
-        df = df.filter(F.expr(prefilter))
     return knn_exact(
         df,
         vector,
         k,
         vec_col="embedding",
         id_col="id",
-        metric=collection.meta.get("metric", "l2"),
+        metric=meta.get("metric", "l2"),
         payload_cols=("payload",),
     )

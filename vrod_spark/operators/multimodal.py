@@ -61,6 +61,46 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = "media_id bigint, kind string, n_bytes bigint, feature array<float>"
 
 
+def _stage_worker(row, schema: str, on_error: str = "raise"):
+    """Build the ``mapInPandas`` worker every decode stage runs: it loops
+    over the ``(media_id, content)`` Arrow batches, calls ``row(bytes)``
+    per blob and emits one output row per tuple ``row`` yields, prefixed
+    with the blob's ``media_id``; ``schema`` names the output columns.
+
+    ``on_error="skip"`` drops what a raising blob had not yet yielded, so
+    ``row``'s shape sets the skip semantics: a list drops the whole blob,
+    a generator keeps the rows it yielded before the error. Rows go
+    through ``pd.DataFrame(rows, columns=...)``, so an all-skipped or
+    empty batch still has object-typed columns, which Arrow converts to
+    ``array<...>`` (an empty ``[]`` column would be float64).
+
+    A nested closure, like the parser factories: the worker pickles BY
+    VALUE, since Python workers cannot import vrod_spark."""
+    cols = [field.split()[0] for field in schema.split(",")]
+    strict = on_error != "skip"
+
+    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for media_id, content in zip(pdf["media_id"], pdf["content"]):
+                try:
+                    for values in row(bytes(content)):
+                        rows.append((media_id, *values))
+                except Exception:
+                    if strict:
+                        raise
+            yield pd.DataFrame(rows, columns=cols)
+
+    return work
+
+
+def _stage(media: DataFrame, row, schema: str, on_error: str) -> DataFrame:
+    """One Arrow-batched stage over ``media``: see :func:`_stage_worker`."""
+    return media.mapInPandas(_stage_worker(row, schema, on_error), schema)
+
+
 def decode_stub(content: bytes, kind: str, *, fake: bool = False) -> dict:
     """Decode a media blob → {width, height, n_channels, ...}.
 
@@ -178,6 +218,27 @@ AUDIO_SCHEMA = (
 )
 
 
+def _band_energy_stage(
+    media: DataFrame, decode, n_bands: int, on_error: str
+) -> DataFrame:
+    """AUDIO_SCHEMA stage of the WAV, ADPCM and MPEG legs: ``decode(bytes)
+    -> (rate, n_frames, mono pcm)``, and the features are ``n_bands``
+    spectral band energies (log-magnitude rFFT averaged into equal bands
+    — the classic cheap audio fingerprint)."""
+
+    def row(b: bytes):
+        import numpy as np
+
+        rate, nframes, pcm = decode(b)
+        chunks = np.array_split(np.log1p(np.abs(np.fft.rfft(pcm))), n_bands)
+        energy = np.array([c.mean() if len(c) else 0.0 for c in chunks],
+                          dtype=np.float32)
+        return [(rate, nframes, int(nframes * 1000 / max(rate, 1)),
+                 energy.tolist())]
+
+    return _stage(media, row, AUDIO_SCHEMA, on_error)
+
+
 def decode_wav_features(
     media: DataFrame, *, n_bands: int = 8, on_error: str = "raise"
 ) -> DataFrame:
@@ -191,51 +252,29 @@ def decode_wav_features(
     ``mapInPandas``, bytes never shuffled, one output row per blob. Image
     decoding sits beside this in the same plumbing (PPM/PNG/GIF/JPEG,
     Y4M/AVI-MJPEG); IMA-ADPCM WAV rides the same parser with a real
-    compressed codec."""
-    bands = n_bands
+    compressed codec.
 
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    Decoded by ``wave``, not ``_wav_parser``: 8-bit samples stay uncentred
+    and the frame count is the header's, as this operator always
+    reported them."""
+
+    def decode(b: bytes):
         import io
         import wave
 
         import numpy as np
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_frames": [],
-                "duration_ms": [], "band_energy": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    with wave.open(io.BytesIO(bytes(content)), "rb") as w:
-                        rate, nframes = w.getframerate(), w.getnframes()
-                        sampwidth, nchan = w.getsampwidth(), w.getnchannels()
-                        raw = w.readframes(nframes)
-                    dtype = {1: np.uint8, 2: np.int16, 4: np.int32}[sampwidth]
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                pcm = np.frombuffer(raw, dtype=dtype).astype(np.float64)
-                if nchan > 1:
-                    pcm = pcm.reshape(-1, nchan).mean(axis=1)
-                spec = np.abs(np.fft.rfft(pcm))
-                chunks = np.array_split(np.log1p(spec), bands)
-                energy = np.array([c.mean() if len(c) else 0.0 for c in chunks],
-                                  dtype=np.float32)
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(nframes)
-                out["duration_ms"].append(int(nframes * 1000 / max(rate, 1)))
-                out["band_energy"].append(energy.tolist())
-            # An all-skipped/empty batch must still carry a LIST-typed
-            # band_energy column: pandas types an empty [] column float64,
-            # which Arrow cannot convert to array<float>.
-            out["band_energy"] = pd.Series(out["band_energy"], dtype="object")
-            yield pd.DataFrame(out)
+        with wave.open(io.BytesIO(b), "rb") as w:
+            rate, nframes = w.getframerate(), w.getnframes()
+            sampwidth, nchan = w.getsampwidth(), w.getnchannels()
+            raw = w.readframes(nframes)
+        dtype = {1: np.uint8, 2: np.int16, 4: np.int32}[sampwidth]
+        pcm = np.frombuffer(raw, dtype=dtype).astype(np.float64)
+        if nchan > 1:
+            pcm = pcm.reshape(-1, nchan).mean(axis=1)
+        return rate, nframes, pcm
 
-    return media.mapInPandas(decode, AUDIO_SCHEMA)
+    return _band_energy_stage(media, decode, n_bands, on_error)
 
 
 def make_wav_bytes(
@@ -298,8 +337,8 @@ IMAGE_SCHEMA = (
 
 def _ppm_parser():
     """Self-contained P6 parser closure (pickled by value, like
-    ``_jpeg_decoder``): ``parse_ppm(bytes) -> (w, h, float64 img in
-    [0,1])``."""
+    ``_jpeg_decoder``): ``parse_ppm(bytes) -> (w, h, uint8 (h, w, 3) rgb,
+    maxval)``."""
 
     def parse_ppm(b: bytes):
         import numpy as np
@@ -324,9 +363,21 @@ def _ppm_parser():
         w, h, maxval = int(tokens[1]), int(tokens[2]), int(tokens[3])
         i += 1  # single whitespace after maxval
         px = np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=i)
-        return w, h, px.reshape(h, w, 3).astype(np.float64) / maxval
+        return w, h, px.reshape(h, w, 3), maxval
 
     return parse_ppm
+
+
+def _image_stage(media: DataFrame, fmt: str, on_error: str) -> DataFrame:
+    """IMAGE_SCHEMA stage of the PPM/PNG/GIF/JPEG legs: dimensions and
+    channel means of the first decoded frame."""
+    decode_image, rgb_means = _image_decoder()
+
+    def row(b: bytes):
+        _, w, h, frames = decode_image(b, fmt)
+        return [(w, h, w * h, *rgb_means(frames[0]))]
+
+    return _stage(media, row, IMAGE_SCHEMA, on_error)
 
 
 def decode_ppm_features(media: DataFrame, *, on_error: str = "raise") -> DataFrame:
@@ -336,33 +387,7 @@ def decode_ppm_features(media: DataFrame, *, on_error: str = "raise") -> DataFra
     pipeline starts with). See decode_png_features / decode_jpeg_features
     for the real compressed-codec paths; PPM proves the identical
     plumbing carries a raw decoder."""
-    parse_ppm = _ppm_parser()
-
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [], "n_pixels": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    w, h, img = parse_ppm(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                means = img.mean(axis=(0, 1))
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["mean_r"].append(round(float(means[0]), 6))
-                out["mean_g"].append(round(float(means[1]), 6))
-                out["mean_b"].append(round(float(means[2]), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, IMAGE_SCHEMA)
+    return _image_stage(media, "ppm", on_error)
 
 
 def make_ppm_bytes(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
@@ -388,59 +413,23 @@ def resize_ppm(
     The byte-transform companion to :func:`resize_plan` (which computes
     target dimensions as metadata-only expressions) — blobs stay inside
     their mapInPandas task, nothing but ids/metadata ever shuffles."""
+    parse_ppm = _ppm_parser()
     cap = max_px
 
-    strict = on_error != "skip"
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(b: bytes):
         import numpy as np
 
-        def parse_ppm(b: bytes):
-            tokens, i, n = [], 0, len(b)
-            while len(tokens) < 4 and i < n:
-                while i < n and b[i : i + 1].isspace():
-                    i += 1
-                if b[i : i + 1] == b"#":
-                    while i < n and b[i : i + 1] != b"\n":
-                        i += 1
-                    continue
-                j = i
-                while j < n and not b[j : j + 1].isspace():
-                    j += 1
-                tokens.append(b[i:j])
-                i = j
-            w, h = int(tokens[1]), int(tokens[2])
-            i += 1
-            px = np.frombuffer(b, dtype=np.uint8, count=w * h * 3, offset=i)
-            return w, h, px.reshape(h, w, 3)
+        w, h, img, _maxval = parse_ppm(b)
+        scale = min(cap / max(w, 1), cap / max(h, 1), 1.0)
+        ow, oh = max(int(round(w * scale)), 1), max(int(round(h * scale)), 1)
+        # Nearest-neighbor index maps (deterministic, no filtering).
+        ys = (np.arange(oh) * (h / oh)).astype(int).clip(0, h - 1)
+        xs = (np.arange(ow) * (w / ow)).astype(int).clip(0, w - 1)
+        small = img[ys][:, xs]
+        blob = f"P6\n{ow} {oh}\n255\n".encode() + small.tobytes()
+        return [(w, h, ow, oh, bytearray(blob))]
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [],
-                "out_width": [], "out_height": [], "content": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    w, h, img = parse_ppm(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                scale = min(cap / max(w, 1), cap / max(h, 1), 1.0)
-                ow, oh = max(int(round(w * scale)), 1), max(int(round(h * scale)), 1)
-                # Nearest-neighbor index maps (deterministic, no filtering).
-                ys = (np.arange(oh) * (h / oh)).astype(int).clip(0, h - 1)
-                xs = (np.arange(ow) * (w / ow)).astype(int).clip(0, w - 1)
-                small = img[ys][:, xs]
-                blob = f"P6\n{ow} {oh}\n255\n".encode() + small.tobytes()
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["out_width"].append(ow)
-                out["out_height"].append(oh)
-                out["content"].append(bytearray(blob))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(work, RESIZED_SCHEMA)
+    return _stage(media, row, RESIZED_SCHEMA, on_error)
 
 
 VIDEO_FRAME_SCHEMA = (
@@ -464,31 +453,15 @@ def extract_y4m_frames(
     step = max(int(every_n), 1)
     parse_y4m = _y4m_parser()
 
-    strict = on_error != "skip"
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "frame_idx": [], "width": [],
-                "height": [], "mean_luma": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                # Frames parsed before a corruption point still emit in
-                # skip mode (the parser is a generator — every yielded
-                # frame precedes the corruption raise).
-                try:
-                    for idx, w, h, luma in parse_y4m(bytes(content)):
-                        if idx % step == 0:
-                            out["media_id"].append(media_id)
-                            out["frame_idx"].append(idx)
-                            out["width"].append(w)
-                            out["height"].append(h)
-                            out["mean_luma"].append(luma)
-                except Exception:
-                    if strict:
-                        raise
-            yield pd.DataFrame(out)
+    def row(b: bytes):
+        # A generator: in skip mode the frames parsed before a corruption
+        # point still emit (every frame parse_y4m yields precedes its
+        # raise).
+        for idx, w, h, luma in parse_y4m(b):
+            if idx % step == 0:
+                yield idx, w, h, luma
 
-    return media.mapInPandas(work, VIDEO_FRAME_SCHEMA)
+    return _stage(media, row, VIDEO_FRAME_SCHEMA, on_error)
 
 
 def _y4m_parser():
@@ -628,34 +601,7 @@ def decode_png_features(media: DataFrame, *, on_error: str = "raise") -> DataFra
     pure DEFLATE + per-row prediction, which the stdlib covers; see
     decode_jpeg_features for the T.81 path and extract_h264_frames for
     the H.264 I_PCM subset."""
-
-    parse_png = _png_parser()
-
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [], "n_pixels": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    w, h, img = parse_png(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                means = img.mean(axis=(0, 1))
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["mean_r"].append(round(float(means[0]), 6))
-                out["mean_g"].append(round(float(means[1]), 6))
-                out["mean_b"].append(round(float(means[2]), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, IMAGE_SCHEMA)
+    return _image_stage(media, "png", on_error)
 
 
 def _png_parser():
@@ -813,40 +759,18 @@ def decode_au_features(
     scope; MPEG-1 Layer I is real — see the MP1 section); μ-law
     proves a genuinely lossy-compressed audio format decodes through the
     identical mapInPandas plumbing."""
-
     parse_au = _au_parser()
 
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(b: bytes):
         import numpy as np
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_frames": [],
-                "duration_ms": [], "band_energy": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    rate, samples = parse_au(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                spec = np.abs(np.fft.rfft(samples)) ** 2
-                bands = np.array_split(spec, n_bands)
-                energy = [float(np.sqrt(b.mean())) for b in bands]
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(int(rate))
-                out["n_frames"].append(len(samples))
-                out["duration_ms"].append(int(len(samples) * 1000 / rate))
-                out["band_energy"].append([round(e, 6) for e in energy])
-            # An all-skipped/empty batch must still carry a LIST-typed
-            # band_energy column: pandas types an empty [] column float64,
-            # which Arrow cannot convert to array<float>.
-            out["band_energy"] = pd.Series(out["band_energy"], dtype="object")
-            yield pd.DataFrame(out)
+        rate, samples = parse_au(b)
+        spec = np.abs(np.fft.rfft(samples)) ** 2
+        energy = [float(np.sqrt(c.mean())) for c in np.array_split(spec, n_bands)]
+        return [(int(rate), len(samples), int(len(samples) * 1000 / rate),
+                 [round(e, 6) for e in energy])]
 
-    return media.mapInPandas(decode, AUDIO_SCHEMA)
+    return _stage(media, row, AUDIO_SCHEMA, on_error)
 
 
 def _au_parser():
@@ -1061,34 +985,7 @@ def decode_gif_features(media: DataFrame, *, on_error: str = "raise") -> DataFra
     """REAL GIF decoding — full LZW expansion (growing dictionary, CLEAR/
     EOI handling, LSB-first variable-width codes) + global-palette lookup,
     pure Python/numpy. Same IMAGE_SCHEMA/mapInPandas plumbing as PPM/PNG."""
-
-    parse_gif = _gif_parser()
-
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [], "n_pixels": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    w, h, img = parse_gif(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                means = img.mean(axis=(0, 1))
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["mean_r"].append(round(float(means[0]), 6))
-                out["mean_g"].append(round(float(means[1]), 6))
-                out["mean_b"].append(round(float(means[2]), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, IMAGE_SCHEMA)
+    return _image_stage(media, "gif", on_error)
 
 
 def _gif_frames_parser():
@@ -1237,18 +1134,6 @@ def _gif_frames_parser():
         return w, h, frames
 
     return parse
-
-
-def _gif_parser():
-    """Single-image view of the GIF parser (back-compat for the
-    IMAGE-schema operators): first composed frame only."""
-    parse_frames = _gif_frames_parser()
-
-    def parse_gif(b: bytes):
-        w, h, frames = parse_frames(b)
-        return w, h, frames[0]
-
-    return parse_gif
 
 
 # ---------------------------------------------------------------------------
@@ -1791,36 +1676,7 @@ def decode_jpeg_features(media: DataFrame, *, on_error: str = "raise") -> DataFr
 
     Scale shape is identical to the other decoders: blobs decode where
     they sit inside Arrow batches; only ids + metadata ever shuffle."""
-
-    parse_jpeg = _jpeg_decoder()
-
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "width": [], "height": [], "n_pixels": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    w, h, img = parse_jpeg(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                means = img.astype(np.float64).mean(axis=(0, 1)) / 255.0
-                out["media_id"].append(media_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["mean_r"].append(round(float(means[0]), 6))
-                out["mean_g"].append(round(float(means[1]), 6))
-                out["mean_b"].append(round(float(means[2]), 6))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, IMAGE_SCHEMA)
+    return _image_stage(media, "jpeg", on_error)
 
 
 # -- IMA ADPCM (DVI4) compressed audio ---------------------------------------
@@ -2050,42 +1906,13 @@ def decode_adpcm_features(
     reconstruction recurrence, then the same rFFT band-energy features as
     the PCM WAV path (AUDIO_SCHEMA). Per-blob work is linear in samples;
     blobs decode inside their Arrow batch, never shuffled."""
-    bands = n_bands
-    parse_wav = _wav_parser()
+    decode_audio = _audio_decoder()
 
-    strict = on_error != "skip"
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def decode(b: bytes):
+        _, rate, pcm = decode_audio(b, "adpcm")
+        return rate, len(pcm), pcm
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_frames": [],
-                "duration_ms": [], "band_energy": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    rate, nframes, pcm = parse_wav(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                spec = np.abs(np.fft.rfft(pcm))
-                chunks = np.array_split(np.log1p(spec), bands)
-                energy = np.array(
-                    [c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32
-                )
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(nframes)
-                out["duration_ms"].append(int(nframes * 1000 / max(rate, 1)))
-                out["band_energy"].append(energy.tolist())
-            # An all-skipped/empty batch must still carry a LIST-typed
-            # band_energy column: pandas types an empty [] column float64,
-            # which Arrow cannot convert to array<float>.
-            out["band_energy"] = pd.Series(out["band_energy"], dtype="object")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, AUDIO_SCHEMA)
+    return _band_energy_stage(media, decode, n_bands, on_error)
 
 
 # -- AVI / Motion-JPEG video -------------------------------------------------
@@ -2156,42 +1983,27 @@ def extract_avi_mjpeg_frames(
     step = max(int(every_n), 1)
     parse_jpeg = _jpeg_decoder()
     mjpeg_frames = _avi_mjpeg_container()
-
     strict = on_error != "skip"
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+    def row(b: bytes):
         import numpy as np
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "frame_idx": [], "width": [],
-                "height": [], "mean_luma": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    frames = mjpeg_frames(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for idx in range(0, len(frames), step):
-                    try:
-                        w, h, img = parse_jpeg(frames[idx])
-                    except Exception:
-                        if strict:
-                            raise
-                        continue
-                    rgb = img.astype(np.float64)
-                    luma = (
-                        0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-                    ).mean()
-                    out["media_id"].append(media_id)
-                    out["frame_idx"].append(idx)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_luma"].append(round(float(luma) / 255, 6))
-            yield pd.DataFrame(out)
+        frames = mjpeg_frames(b)
+        for idx in range(0, len(frames), step):
+            # Skip mode drops only the undecodable frame, not the clip.
+            try:
+                w, h, img = parse_jpeg(frames[idx])
+            except Exception:
+                if strict:
+                    raise
+                continue
+            rgb = img.astype(np.float64)
+            luma = (
+                0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
+            ).mean()
+            yield idx, w, h, round(float(luma) / 255, 6)
 
-    return media.mapInPandas(work, VIDEO_FRAME_SCHEMA)
+    return _stage(media, row, VIDEO_FRAME_SCHEMA, on_error)
 
 
 MEL_SCHEMA = (
@@ -2228,66 +2040,45 @@ def mel_spectrogram_features(
     shuffle, only ids + the fixed-width feature rows."""
     if fmax is not None and fmax <= fmin:
         raise ValueError("fmax must exceed fmin")
-    parse_wav = _wav_parser()
+    decode_audio = _audio_decoder()
     nf, hp, nm, f_lo, f_hi = int(n_fft), int(hop), int(n_mels), float(fmin), fmax
 
-    strict = on_error != "skip"
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def mel_bank(rate: int):
         import numpy as np
 
-        def mel_bank(rate: int) -> np.ndarray:
-            hi = min(f_hi, rate / 2.0) if f_hi is not None else rate / 2.0
+        hi = min(f_hi, rate / 2.0) if f_hi is not None else rate / 2.0
 
-            def to_mel(f):
-                return 2595.0 * np.log10(1.0 + np.asarray(f) / 700.0)
+        def to_mel(f):
+            return 2595.0 * np.log10(1.0 + np.asarray(f) / 700.0)
 
-            def from_mel(m):
-                return 700.0 * (10.0 ** (np.asarray(m) / 2595.0) - 1.0)
+        def from_mel(m):
+            return 700.0 * (10.0 ** (np.asarray(m) / 2595.0) - 1.0)
 
-            pts = from_mel(np.linspace(to_mel(f_lo), to_mel(hi), nm + 2))
-            bins = np.fft.rfftfreq(nf, d=1.0 / rate)
-            bank = np.zeros((nm, len(bins)))
-            for m in range(nm):
-                left, center, right = pts[m], pts[m + 1], pts[m + 2]
-                up = (bins - left) / max(center - left, 1e-12)
-                down = (right - bins) / max(right - center, 1e-12)
-                bank[m] = np.clip(np.minimum(up, down), 0.0, None)
-            return bank
+        pts = from_mel(np.linspace(to_mel(f_lo), to_mel(hi), nm + 2))
+        bins = np.fft.rfftfreq(nf, d=1.0 / rate)
+        bank = np.zeros((nm, len(bins)))
+        for m in range(nm):
+            left, center, right = pts[m], pts[m + 1], pts[m + 2]
+            up = (bins - left) / max(center - left, 1e-12)
+            down = (right - bins) / max(right - center, 1e-12)
+            bank[m] = np.clip(np.minimum(up, down), 0.0, None)
+        return bank
 
+    def row(b: bytes):
+        import numpy as np
+
+        _, rate, pcm = decode_audio(b, "wav")
+        if len(pcm) < nf:
+            pcm = np.pad(pcm, (0, nf - len(pcm)))
+        n_frames = 1 + (len(pcm) - nf) // hp
+        idx = np.arange(nf)[None, :] + hp * np.arange(n_frames)[:, None]
         window = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(nf) / nf)
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_stft_frames": [],
-                "n_mels": [], "dominant_band": [], "log_mel": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    rate, _n, pcm = parse_wav(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                if len(pcm) < nf:
-                    pcm = np.pad(pcm, (0, nf - len(pcm)))
-                n_frames = 1 + (len(pcm) - nf) // hp
-                idx = np.arange(nf)[None, :] + hp * np.arange(n_frames)[:, None]
-                frames = pcm[idx] * window[None, :]
-                power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                mel = power @ mel_bank(rate).T
-                log_mel = np.log1p(mel)
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(rate)
-                out["n_stft_frames"].append(n_frames)
-                out["n_mels"].append(nm)
-                out["dominant_band"].append(int(np.argmax(mel.sum(axis=0))))
-                out["log_mel"].append(
-                    log_mel.astype(np.float32).reshape(-1).tolist()
-                )
-            out["log_mel"] = pd.Series(out["log_mel"], dtype="object")
-            yield pd.DataFrame(out)
+        power = np.abs(np.fft.rfft(pcm[idx] * window[None, :], axis=1)) ** 2
+        mel = power @ mel_bank(rate).T
+        return [(rate, n_frames, nm, int(np.argmax(mel.sum(axis=0))),
+                 np.log1p(mel).astype(np.float32).reshape(-1).tolist())]
 
-    return media.mapInPandas(work, MEL_SCHEMA)
+    return _stage(media, row, MEL_SCHEMA, on_error)
 
 
 # -- H.264 / AVC (ITU-T H.264, Constrained Baseline, declared subset) --------
@@ -3981,32 +3772,12 @@ def extract_h264_frames(
     step = max(int(every_n), 1)
     parse_h264 = _h264_decoder()
 
-    strict = on_error != "skip"
+    def row(b: bytes):
+        w, h, planes = parse_h264(b)
+        return [(idx, w, h, round(float(planes[idx].mean()) / 255, 6))
+                for idx in range(0, len(planes), step)]
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "frame_idx": [], "width": [],
-                "height": [], "mean_luma": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    w, h, planes = parse_h264(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                for idx in range(0, len(planes), step):
-                    out["media_id"].append(media_id)
-                    out["frame_idx"].append(idx)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["mean_luma"].append(
-                        round(float(planes[idx].mean()) / 255, 6)
-                    )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(work, VIDEO_FRAME_SCHEMA)
+    return _stage(media, row, VIDEO_FRAME_SCHEMA, on_error)
 
 
 def _media_sniffer():
@@ -4065,6 +3836,79 @@ def sniff_media_format(b: bytes) -> str:
     return _media_sniffer()(b)
 
 
+def _image_decoder():
+    """Image dispatcher closures: ``decode_image(bytes, fmt=None) -> (fmt,
+    w, h, frames)`` for ppm, png, gif and jpeg, sniffing ``fmt`` when it is
+    not given (a given one skips the sniff, as the per-format operators
+    always did). ``frames`` holds one RGB array per composed frame,
+    several only for animated GIFs: float64 in [0, 1], except JPEG's
+    uint8 samples. ``rgb_means(frame)`` gives the three channel means in
+    [0, 1], rounded to 6 decimals (JPEG's divided by 255 after averaging,
+    as its operators always computed them)."""
+    sniff = _media_sniffer()
+    parse_ppm, parse_png = _ppm_parser(), _png_parser()
+    parse_gif, parse_jpeg = _gif_frames_parser(), _jpeg_decoder()
+
+    def decode_image(b: bytes, fmt: str | None = None):
+        import numpy as np
+
+        fmt = fmt or sniff(b)
+        if fmt == "ppm":
+            w, h, px, maxval = parse_ppm(b)
+            frames = [px.astype(np.float64) / maxval]
+        elif fmt == "png":
+            w, h, img = parse_png(b)
+            frames = [img]
+        elif fmt == "gif":
+            w, h, frames = parse_gif(b)
+        elif fmt == "jpeg":
+            w, h, img = parse_jpeg(b)
+            frames = [img]
+        else:
+            raise ValueError(f"not a decodable image format: {fmt!r}")
+        return fmt, w, h, frames
+
+    def rgb_means(frame):
+        import numpy as np
+
+        peak = 255.0 if frame.dtype == np.uint8 else 1.0
+        means = np.asarray(frame, dtype=np.float64).mean(axis=(0, 1)) / peak
+        return [round(float(m), 6) for m in means]
+
+    return decode_image, rgb_means
+
+
+def _audio_decoder():
+    """Audio dispatcher closure: ``decode_audio(bytes, fmt=None) -> (fmt,
+    rate, mono float64 pcm)`` for wav, adpcm (both through
+    ``_wav_parser``), au, mp1, mp2 and mp3, sniffing ``fmt`` when it is
+    not given. A given fmt skips the sniff, so an MPEG stream behind a
+    garbage prefix still decodes (the sync-scan parsers find it). Raises
+    ValueError on anything undecodable, an MPEG blob with no frames
+    included."""
+    sniff = _media_sniffer()
+    parse_wav, parse_au = _wav_parser(), _au_parser()
+    parse_mpeg = {"mp1": _mp1_parser(), "mp2": _mp2_parser(), "mp3": _mp3_parser()}
+
+    def decode_audio(b: bytes, fmt: str | None = None):
+        import numpy as np
+
+        fmt = fmt or sniff(b)
+        if fmt in ("wav", "adpcm"):
+            rate, _n, pcm = parse_wav(b)
+        elif fmt == "au":
+            rate, pcm = parse_au(b)
+        elif fmt in parse_mpeg:
+            rate, pcm = parse_mpeg[fmt](b)
+            if rate is None:
+                raise ValueError(f"no decodable {fmt} frames")
+        else:
+            raise ValueError(f"not a decodable audio format: {fmt!r}")
+        return fmt, int(rate), np.asarray(pcm, dtype=np.float64)
+
+    return decode_audio
+
+
 MEDIA_SUMMARY_SCHEMA = (
     "media_id bigint, format string, idx int, width int, height int, "
     "m1 double, m2 double, m3 double"
@@ -4094,106 +3938,53 @@ def decode_media(
     corruption point when that matters."""
     step = max(int(every_n), 1)
     sniff = _media_sniffer()
-    parsers = {
-        "ppm": _ppm_parser(),
-        "png": _png_parser(),
-        "gif": _gif_frames_parser(),
-        "jpeg": _jpeg_decoder(),
-        "wav": _wav_parser(),
-        "au": _au_parser(),
-        "y4m": _y4m_parser(),
-        "avi": _avi_mjpeg_container(),
-        "h264": _h264_decoder(with_chroma=True),
-        "mp1": _mp1_parser(),
-        "mp2": _mp2_parser(),
-        "mp3": _mp3_parser(),
-    }
-    strict = on_error != "skip"
+    decode_image, rgb_means = _image_decoder()
+    decode_audio = _audio_decoder()
+    parse_y4m, parse_jpeg = _y4m_parser(), _jpeg_decoder()
+    mjpeg_frames = _avi_mjpeg_container()
+    parse_h264 = _h264_decoder(with_chroma=True)
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(b: bytes):
         import numpy as np
-        import pandas as pd
 
-        cols = ["media_id", "format", "idx", "width", "height", "m1", "m2", "m3"]
+        # A list, not a generator: skip mode drops the whole blob.
+        fmt = sniff(b)
+        if fmt in ("ppm", "png", "gif", "jpeg"):
+            # Animated GIFs yield one row per sampled composed frame
+            # (idx); every other image is one idx-0 row.
+            _, w, h, frames = decode_image(b, fmt)
+            return [(fmt, idx, w, h, *rgb_means(frames[idx]))
+                    for idx in range(0, len(frames), step)]
+        if fmt in ("wav", "adpcm", "au", "mp1", "mp2", "mp3"):
+            _, rate, pcm = decode_audio(b, fmt)
+            n = len(pcm)
+            return [(fmt, 0, 0, 0, float(rate), float(n),
+                     float(int(n * 1000 / max(rate, 1))))]
+        if fmt == "y4m":
+            return [(fmt, idx, w, h, luma, 0.0, 0.0)
+                    for idx, w, h, luma in parse_y4m(b) if idx % step == 0]
+        rows = []
+        if fmt == "avi":
+            frames = mjpeg_frames(b)
+            for idx in range(0, len(frames), step):
+                w, h, img = parse_jpeg(frames[idx])
+                rgb = img.astype(np.float64)
+                luma = (
+                    0.299 * rgb[..., 0] + 0.587 * rgb[..., 1]
+                    + 0.114 * rgb[..., 2]
+                ).mean()
+                rows.append((fmt, idx, w, h, round(float(luma) / 255, 6), 0.0, 0.0))
+        else:  # h264 — full YUV: mean luma + mean Cb/Cr per frame
+            w, h, planes = parse_h264(b)
+            for idx in range(0, len(planes), step):
+                y_, cb_, cr_p = planes[idx]
+                rows.append((fmt, idx, w, h,
+                             round(float(y_.mean()) / 255, 6),
+                             round(float(cb_.mean()) / 255, 6),
+                             round(float(cr_p.mean()) / 255, 6)))
+        return rows
 
-        def rows_for(media_id, b):
-            fmt = sniff(b)
-            rows = []
-            if fmt in ("ppm", "png"):
-                w, h, img = parsers[fmt](b)
-                m = img.mean(axis=(0, 1))
-                rows.append((media_id, fmt, 0, w, h,
-                             round(float(m[0]), 6), round(float(m[1]), 6),
-                             round(float(m[2]), 6)))
-            elif fmt == "gif":
-                # Animated GIFs yield one row per sampled composed frame
-                # (idx); single-image GIFs stay one idx-0 row.
-                w, h, gframes = parsers["gif"](b)
-                for idx in range(0, len(gframes), step):
-                    m = gframes[idx].mean(axis=(0, 1))
-                    rows.append((media_id, fmt, idx, w, h,
-                                 round(float(m[0]), 6), round(float(m[1]), 6),
-                                 round(float(m[2]), 6)))
-            elif fmt == "jpeg":
-                w, h, img = parsers["jpeg"](b)
-                m = img.astype(np.float64).mean(axis=(0, 1)) / 255.0
-                rows.append((media_id, fmt, 0, w, h,
-                             round(float(m[0]), 6), round(float(m[1]), 6),
-                             round(float(m[2]), 6)))
-            elif fmt in ("wav", "adpcm"):
-                rate, nframes, _pcm = parsers["wav"](b)
-                rows.append((media_id, fmt, 0, 0, 0, float(rate),
-                             float(nframes),
-                             float(int(nframes * 1000 / max(rate, 1)))))
-            elif fmt == "au":
-                rate, pcm = parsers["au"](b)
-                rows.append((media_id, fmt, 0, 0, 0, float(rate),
-                             float(len(pcm)),
-                             float(int(len(pcm) * 1000 / max(rate, 1)))))
-            elif fmt in ("mp1", "mp2", "mp3"):
-                rate, pcm = parsers[fmt](b)
-                if rate is None:
-                    raise ValueError(f"no decodable {fmt} frames")
-                rows.append((media_id, fmt, 0, 0, 0, float(rate),
-                             float(len(pcm)),
-                             float(int(len(pcm) * 1000 / max(rate, 1)))))
-            elif fmt == "y4m":
-                for idx, w, h, luma in parsers["y4m"](b):
-                    if idx % step == 0:
-                        rows.append((media_id, fmt, idx, w, h, luma, 0.0, 0.0))
-            elif fmt == "avi":
-                frames = parsers["avi"](b)
-                for idx in range(0, len(frames), step):
-                    w, h, img = parsers["jpeg"](frames[idx])
-                    rgb = img.astype(np.float64)
-                    luma = (
-                        0.299 * rgb[..., 0] + 0.587 * rgb[..., 1]
-                        + 0.114 * rgb[..., 2]
-                    ).mean()
-                    rows.append((media_id, fmt, idx, w, h,
-                                 round(float(luma) / 255, 6), 0.0, 0.0))
-            else:  # h264 — full YUV: mean luma + mean Cb/Cr per frame
-                w, h, planes = parsers["h264"](b)
-                for idx in range(0, len(planes), step):
-                    y_, cb_, cr_p = planes[idx]
-                    rows.append((media_id, fmt, idx, w, h,
-                                 round(float(y_.mean()) / 255, 6),
-                                 round(float(cb_.mean()) / 255, 6),
-                                 round(float(cr_p.mean()) / 255, 6)))
-            return rows
-
-        for pdf in batches:
-            collected = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    collected.extend(rows_for(media_id, bytes(content)))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-            yield pd.DataFrame(collected, columns=cols)
-
-    return media.mapInPandas(work, MEDIA_SUMMARY_SCHEMA)
+    return _stage(media, row, MEDIA_SUMMARY_SCHEMA, on_error)
 
 
 def _avi_mjpeg_container():
@@ -4454,38 +4245,21 @@ def decode_mp1_features(media: DataFrame, *, n_bands: int = 8) -> DataFrame:
     like the WAV/AU/ADPCM legs, so the q51 gate hash-checks the
     header-derived metadata (sample rate, decoded frame count, duration)
     and pytest pins spectral fidelity."""
-    bands = n_bands
-    parse_mp1 = _mp1_parser()
+    return _mpeg_stage(media, "mp1", n_bands)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_frames": [],
-                "duration_ms": [], "band_energy": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rate, pcm = parse_mp1(bytes(content))
-                if rate is None:
-                    continue
-                spec = np.abs(np.fft.rfft(pcm))
-                chunks = np.array_split(np.log1p(spec), bands)
-                energy = np.array(
-                    [c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32
-                )
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(pcm))
-                out["duration_ms"].append(int(len(pcm) * 1000 / max(rate, 1)))
-                out["band_energy"].append(energy.tolist())
-            # An all-skipped/empty batch must still carry a LIST-typed
-            # band_energy column: pandas types an empty [] column float64,
-            # which Arrow cannot convert to array<float>.
-            out["band_energy"] = pd.Series(out["band_energy"], dtype="object")
-            yield pd.DataFrame(out)
+def _mpeg_stage(media: DataFrame, fmt: str, n_bands: int) -> DataFrame:
+    """AUDIO_SCHEMA stage of the MP1/MP2/MP3 legs. Their parsers are
+    self-synchronizing sync scans, so the codec family's native skip
+    semantics apply: a blob with no decodable frame is dropped, never
+    raised."""
+    decode_audio = _audio_decoder()
 
-    return media.mapInPandas(decode, AUDIO_SCHEMA)
+    def decode(b: bytes):
+        _, rate, pcm = decode_audio(b, fmt)
+        return rate, len(pcm), pcm
+
+    return _band_energy_stage(media, decode, n_bands, "skip")
 
 
 # -- MPEG-1 Audio Layer II ("MP2") -------------------------------------------
@@ -5223,35 +4997,7 @@ def decode_mp3_features(media: DataFrame, *, n_bands: int = 8) -> DataFrame:
     exactly like the WAV/AU/ADPCM/MP1/MP2 legs, so the q51 gate
     hash-checks the header-derived metadata and pytest pins spectral
     fidelity. Undecodable blobs are skipped, never raised."""
-    bands = n_bands
-    parse_mp3 = _mp3_parser()
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_frames": [],
-                "duration_ms": [], "band_energy": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rate, pcm = parse_mp3(bytes(content))
-                if rate is None:
-                    continue
-                spec = np.abs(np.fft.rfft(pcm))
-                chunks = np.array_split(np.log1p(spec), bands)
-                energy = np.array(
-                    [c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32
-                )
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(pcm))
-                out["duration_ms"].append(int(len(pcm) * 1000 / max(rate, 1)))
-                out["band_energy"].append(energy.tolist())
-            out["band_energy"] = pd.Series(out["band_energy"], dtype="object")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, AUDIO_SCHEMA)
+    return _mpeg_stage(media, "mp3", n_bands)
 
 
 def decode_mp2_features(media: DataFrame, *, n_bands: int = 8) -> DataFrame:
@@ -5261,35 +5007,7 @@ def decode_mp2_features(media: DataFrame, *, n_bands: int = 8) -> DataFrame:
     features exactly like the WAV/AU/ADPCM/MP1 legs, so the q51 gate
     hash-checks the header-derived metadata and pytest pins spectral
     fidelity. Undecodable blobs are skipped, never raised."""
-    bands = n_bands
-    parse_mp2 = _mp2_parser()
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "n_frames": [],
-                "duration_ms": [], "band_energy": [],
-            }
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                rate, pcm = parse_mp2(bytes(content))
-                if rate is None:
-                    continue
-                spec = np.abs(np.fft.rfft(pcm))
-                chunks = np.array_split(np.log1p(spec), bands)
-                energy = np.array(
-                    [c.mean() if len(c) else 0.0 for c in chunks], dtype=np.float32
-                )
-                out["media_id"].append(media_id)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(pcm))
-                out["duration_ms"].append(int(len(pcm) * 1000 / max(rate, 1)))
-                out["band_energy"].append(energy.tolist())
-            out["band_energy"] = pd.Series(out["band_energy"], dtype="object")
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(decode, AUDIO_SCHEMA)
+    return _mpeg_stage(media, "mp2", n_bands)
 
 
 DHASH_SCHEMA = "media_id bigint, format string, width int, height int, dhash long"
@@ -5316,65 +5034,28 @@ def image_dhash(
     One Arrow stage; blobs never shuffle — only (id, 8-byte hash) leaves
     the scan, so the downstream band join is O(rows), not O(bytes).
     """
-    sniff = _media_sniffer()
-    parsers = {
-        "ppm": _ppm_parser(),
-        "png": _png_parser(),
-        "gif": _gif_frames_parser(),
-        "jpeg": _jpeg_decoder(),
-    }
-    strict = on_error != "skip"
+    decode_image, _ = _image_decoder()
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(b: bytes):
         import numpy as np
-        import pandas as pd
 
-        def one(b: bytes):
-            fmt = sniff(b)
-            if fmt in ("ppm", "png"):
-                w, h, img = parsers[fmt](b)
-            elif fmt == "gif":
-                w, h, frames = parsers["gif"](b)
-                img = frames[0]
-            elif fmt == "jpeg":
-                w, h, img = parsers["jpeg"](b)
-            else:
-                raise ValueError(f"not a decodable image format: {fmt!r}")
-            rgb = np.asarray(img, dtype=np.float64)
-            luma = (
-                0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
-            )
-            # Nearest-neighbor resample to 9 cols x 8 rows (floor index —
-            # deterministic, engine-independent, matches resize_ppm).
-            ys = (np.arange(8) * h) // 8
-            xs = (np.arange(9) * w) // 9
-            small = luma[np.ix_(ys, xs)]
-            bits = (small[:, 1:] > small[:, :-1]).flatten()  # row-major, 64 bits
-            val = 0
-            for bit in bits:
-                val = (val << 1) | int(bit)
-            if val >= 1 << 63:
-                val -= 1 << 64
-            return fmt, w, h, val
+        fmt, w, h, frames = decode_image(b)
+        rgb = np.asarray(frames[0], dtype=np.float64)
+        luma = 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
+        # Nearest-neighbor resample to 9 cols x 8 rows (floor index —
+        # deterministic, engine-independent, matches resize_ppm).
+        ys = (np.arange(8) * h) // 8
+        xs = (np.arange(9) * w) // 9
+        small = luma[np.ix_(ys, xs)]
+        bits = (small[:, 1:] > small[:, :-1]).flatten()  # row-major, 64 bits
+        val = 0
+        for bit in bits:
+            val = (val << 1) | int(bit)
+        if val >= 1 << 63:
+            val -= 1 << 64
+        return [(fmt, w, h, val)]
 
-        for pdf in batches:
-            out = {"media_id": [], "format": [], "width": [], "height": [],
-                   "dhash": []}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    fmt, w, h, val = one(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                out["media_id"].append(media_id)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["dhash"].append(val)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(work, DHASH_SCHEMA)
+    return _stage(media, row, DHASH_SCHEMA, on_error)
 
 
 def select_keyframes(
@@ -5434,78 +5115,35 @@ def audio_fingerprint(
     construction); t=0 compares against a zero row. One Arrow stage;
     only (id, 8 bytes) ever shuffles.
     """
-    sniff = _media_sniffer()
-    parsers = {
-        "wav": _wav_parser(),
-        "au": _au_parser(),
-        "mp1": _mp1_parser(),
-        "mp2": _mp2_parser(),
-        "mp3": _mp3_parser(),
-    }
-    strict = on_error != "skip"
+    decode_audio = _audio_decoder()
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(b: bytes):
         import numpy as np
-        import pandas as pd
 
-        def decode(b: bytes):
-            fmt = sniff(b)
-            if fmt in ("wav", "adpcm"):
-                rate, _n, pcm = parsers["wav"](b)
-            elif fmt == "au":
-                rate, pcm = parsers["au"](b)
-            elif fmt in ("mp1", "mp2", "mp3"):
-                rate, pcm = parsers[fmt](b)
-                if rate is None:
-                    raise ValueError(f"no decodable {fmt} frames")
-            else:
-                raise ValueError(f"not a decodable audio format: {fmt!r}")
-            return fmt, int(rate), np.asarray(pcm, dtype=np.float64)
+        fmt, rate, pcm = decode_audio(b)
+        n = len(pcm)
+        if n < 16:
+            raise ValueError("audio too short to fingerprint")
+        slices = np.array_split(pcm, 8)
+        bands = np.empty((8, 9), dtype=np.float64)
+        for t, sl in enumerate(slices):
+            spec = np.abs(np.fft.rfft(sl)) ** 2
+            # 9 log-spaced bands over the positive spectrum (DC bin
+            # excluded — it carries offset, not content).
+            edges = np.unique(np.geomspace(1, len(spec) - 1, 10).astype(np.int64))
+            while len(edges) < 10:  # tiny spectra: pad by extending
+                edges = np.append(edges, edges[-1] + 1)
+            for k in range(9):
+                bands[t, k] = spec[edges[k]:max(edges[k + 1], edges[k] + 1)].sum()
+        e = np.log1p(bands)
+        fdiff = e[:, 1:] - e[:, :-1]              # 8 x 8 frequency deltas
+        prev = np.vstack([np.zeros((1, 8)), fdiff[:-1]])
+        bits = (fdiff > prev).flatten()           # 64 bits, row-major
+        val = 0
+        for bit in bits:
+            val = (val << 1) | int(bit)
+        if val >= 1 << 63:
+            val -= 1 << 64
+        return [(fmt, rate, n, val)]
 
-        def one(b: bytes):
-            fmt, rate, pcm = decode(b)
-            n = len(pcm)
-            if n < 16:
-                raise ValueError("audio too short to fingerprint")
-            slices = np.array_split(pcm, 8)
-            bands = np.empty((8, 9), dtype=np.float64)
-            for t, sl in enumerate(slices):
-                spec = np.abs(np.fft.rfft(sl)) ** 2
-                # 9 log-spaced bands over the positive spectrum (DC bin
-                # excluded — it carries offset, not content).
-                edges = np.unique(
-                    np.geomspace(1, len(spec) - 1, 10).astype(np.int64)
-                )
-                while len(edges) < 10:  # tiny spectra: pad by extending
-                    edges = np.append(edges, edges[-1] + 1)
-                for k in range(9):
-                    bands[t, k] = spec[edges[k]:max(edges[k + 1], edges[k] + 1)].sum()
-            e = np.log1p(bands)
-            fdiff = e[:, 1:] - e[:, :-1]              # 8 x 8 frequency deltas
-            prev = np.vstack([np.zeros((1, 8)), fdiff[:-1]])
-            bits = (fdiff > prev).flatten()           # 64 bits, row-major
-            val = 0
-            for bit in bits:
-                val = (val << 1) | int(bit)
-            if val >= 1 << 63:
-                val -= 1 << 64
-            return fmt, rate, n, val
-
-        for pdf in batches:
-            out = {"media_id": [], "format": [], "sample_rate": [],
-                   "n_frames": [], "fp": []}
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    fmt, rate, n, val = one(bytes(content))
-                except Exception:
-                    if strict:
-                        raise
-                    continue
-                out["media_id"].append(media_id)
-                out["format"].append(fmt)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(n)
-                out["fp"].append(val)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(work, AUDIO_FP_SCHEMA)
+    return _stage(media, row, AUDIO_FP_SCHEMA, on_error)

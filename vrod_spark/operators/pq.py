@@ -686,7 +686,8 @@ def reindex_ivfpq(
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
         (
-            # One task per centroid bucket (r17, the ann.py rationale).
+            # Roughly one task per centroid bucket (hash partitioning;
+            # r17, the ann.py rationale).
             enc.repartition(len(centroids), "bucket")
             .sortWithinPartitions("bucket", "id")
             .write.partitionBy("bucket")
@@ -734,8 +735,11 @@ def pq_collection_search(
     *,
     prefilter: str | None = None,
     rescore_factor: int = 4,
+    snapshot: tuple | None = None,
 ) -> DataFrame:
-    """SEARCHSIMILAR over a pq/ivfpq-REINDEXed collection:
+    """SEARCHSIMILAR over a pq/ivfpq-REINDEXed collection, scanning
+    ``snapshot`` = ``(version, meta, live index)`` (``Collection.snapshot()``,
+    the current one by default):
 
     1. ivfpq only — occupancy-aware bucket probing (reuses
        ``ivf_candidate_buckets``: skips empty buckets, expands until the
@@ -761,18 +765,13 @@ def pq_collection_search(
 
     from vrod_spark.operators.knn import knn_exact
 
-    idx = collection.live_index()
-    if idx is None:
-        raise RuntimeError(
-            f"{collection.name}: no live index (missing, or its commit "
-            "never became visible — re-run REINDEX)"
-        )
+    version, meta, idx = snapshot or collection.snapshot()
     cb = np.asarray(idx["codebooks"], dtype=np.float64)
     rotation = (
         np.asarray(idx["rotation"], dtype=np.float64) if idx.get("rotation") else None
     )
     spark = collection.db.spark
-    raw = spark.read.parquet(collection.version_dir())
+    raw = spark.read.parquet(collection.version_dir(version))
     cand = raw
     if idx["kind"] == "ivfpq":
         from vrod_spark.operators.ivf import ivf_candidate_buckets
@@ -808,6 +807,6 @@ def pq_collection_search(
         k,
         vec_col="embedding",
         id_col="id",
-        metric=collection.meta.get("metric", "l2"),
+        metric=meta.get("metric", "l2"),
         payload_cols=("payload",),
     )

@@ -16,7 +16,6 @@ Conventions (FIXTURES.md canonicalization):
 
 from __future__ import annotations
 
-import contextlib
 import functools
 import os
 import threading
@@ -111,60 +110,7 @@ _SUBPLAN_LOCK = threading.Lock()
 #: (multi-second holds each) on its critical path.
 _LOCKS_KEY = ("__build_locks__",)
 
-#: Bounded fan-out for MATERIALIZATION builds (r16 VERDICT item 1 — the
-#: pass-1 "materialization convoy"): under the 46-query concurrent suite,
-#: ~10 session-shared snapshot builds fire near-simultaneously in pass 1.
-#: The theory was that a small semaphore capping concurrent builder
-#: pipelines would let their shuffles pipeline instead of thrash.
-#: DEFAULT OFF (0 = unbounded, the pre-r17 behavior): interleaved A/B at
-#: sf0.1/local[32] (4 pairs, VROD_BUILD_FANOUT=3 vs 0, same windows)
-#: read the cap WORSE on the pass-1 wall (oracle-normalized medians 1.52
-#: vs 1.34; raw p1 min 19.5 vs 16.9 s) and no better on the best-of-2
-#: headline — queueing a build delays every consumer blocked on it, and
-#: the local-mode scheduler already interleaves the builds' stages fine.
-#: Same family of negative result as the r16 weighted-FAIR builder pool.
-#: The knob stays for deployments whose builds contend on something the
-#: scheduler cannot see (e.g. a shared object-store egress limit).
-_BUILD_GATE = threading.local()
-_BUILD_SEMAPHORES: dict[int, threading.Semaphore] = {}
-
-
-def _build_slot():
-    """Context manager bounding concurrent materialization builds.
-
-    Reentrant per thread (a builder that itself resolves another shared
-    asset must not self-deadlock) and inert when VROD_BUILD_FANOUT is
-    unset/0 (the measured default — see the fan-out note above)."""
-    try:
-        cap = int(os.environ.get("VROD_BUILD_FANOUT", "0") or 0)
-    except ValueError:
-        cap = 0
-    if cap <= 0 or getattr(_BUILD_GATE, "held", False):
-        return contextlib.nullcontext()
-    with _SUBPLAN_LOCK:
-        sem = _BUILD_SEMAPHORES.setdefault(cap, threading.Semaphore(cap))
-
-    @contextlib.contextmanager
-    def slot():
-        # Bounded wait, not a hard block: no builder today resolves
-        # ANOTHER shared asset mid-build (the cross-key shape that could
-        # deadlock a full semaphore), but if one ever does, a timed-out
-        # acquire degrades to the pre-r17 unbounded behavior instead of
-        # hanging the suite.
-        got = sem.acquire(timeout=120.0)
-        _BUILD_GATE.held = True
-        try:
-            yield
-        finally:
-            _BUILD_GATE.held = False
-            if got:
-                sem.release()
-
-    return slot()
-
-
-def _shared_cached(spark: SparkSession, key: tuple, build: Callable[[], object],
-                   *, gate: bool = False) -> object:
+def _shared_cached(spark: SparkSession, key: tuple, build: Callable[[], object]) -> object:
     with _SUBPLAN_LOCK:
         per = _SUBPLAN_CACHE.setdefault(spark, {})
         if key in per:
@@ -174,37 +120,7 @@ def _shared_cached(spark: SparkSession, key: tuple, build: Callable[[], object],
         with _SUBPLAN_LOCK:
             if key in per:
                 return per[key]
-        # Optionally run the build's Spark jobs in a weighted FAIR pool
-        # (VROD_BUILD_POOL=vrod_build; conf/fairscheduler.xml declares the
-        # weights). The theory: a snapshot build is a shared prerequisite
-        # many blocked consumers fan out from, but in the caller's own
-        # pool it gets one query's 1/Nth share of task slots under a
-        # concurrent workload — the pass-1 "materialization convoy".
-        # DEFAULT OFF: interleaved quiet-window A/B on the shared-JVM
-        # local-mode suite (5 pairs, both run orders) read the pool
-        # WORSE on both the oracle-normalized pass-1 wall (median 1.65
-        # vs 1.39) and the best-of-2 headline (median 1.21 vs 1.01) —
-        # boosting corpus-sized builder stages crowds out the many small
-        # queries that would otherwise finish and release their slots.
-        # Same lesson as the SHJ knob in session.py: deployments with
-        # per-executor isolation can opt in; the shared-pool local mode
-        # must not. When enabled, the pool is set explicitly on THIS
-        # Python thread (pinned-thread mode: JVM local properties do not
-        # inherit from the Python parent thread) and restored after, so
-        # the consumer's own jobs keep the caller's pool. Scheduling
-        # only; plans and results are untouched either way.
-        build_pool = os.environ.get("VROD_BUILD_POOL", "").strip()
-        with (_build_slot() if gate else contextlib.nullcontext()):
-            if build_pool:
-                sc = spark.sparkContext
-                prev_pool = sc.getLocalProperty("spark.scheduler.pool")
-                sc.setLocalProperty("spark.scheduler.pool", build_pool)
-                try:
-                    value = build()
-                finally:
-                    sc.setLocalProperty("spark.scheduler.pool", prev_pool)
-            else:
-                value = build()
+        value = build()
         with _SUBPLAN_LOCK:
             per[key] = value
     return value
@@ -321,10 +237,7 @@ def _shared_materialized(spark: SparkSession, key: tuple, builder: Callable[[], 
 
     # The mode is part of the identity: a mid-session env flip must not
     # hand a table-mode consumer a localCheckpoint frame (or vice versa).
-    # gate=True: materialization builds are the corpus-sized pipelines the
-    # pass-1 fan-out cap exists for (_build_slot); scalar computes stay
-    # ungated.
-    value = _shared_cached(spark, (mode, *key), build, gate=True)
+    value = _shared_cached(spark, (mode, *key), build)
     if mode == "table":
         # Heartbeat (ADVICE r15): refresh the snapshot dir's mtime on
         # every cache hit, not only at build, so the GC's mtime age gate

@@ -115,8 +115,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE sort-merge → shuffled-hash rewrite (guide §3.1): OFF by
-        # default (Spark's own default). Isolated-query probes favored it
+        # AQE sort-merge → shuffled-hash rewrite (guide §3.1,
+        # spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold): left
+        # at Spark's default, 0 = off. Isolated-query probes favored it
         # (q53 0.84→0.56 s, q54 1.31→0.97 s, q42 0.71→0.57 s serial at
         # sf0.1), but the engine is multi-tenant: under the 46-query
         # concurrent suite every converted join's per-partition hash
@@ -128,11 +129,7 @@ def get_spark(
         # path degrades gracefully under that contention; the hash build
         # does not. Deployments with per-executor memory isolation (a
         # real cluster, where concurrent queries do not share one pool)
-        # can opt in: VROD_SHJ_LOCALMAP_BYTES=67108864.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("VROD_SHJ_LOCALMAP_BYTES", "0"),
-        )
+        # can opt in through get_spark(extra_conf={...: "64m"}).
         # Fair scheduling across concurrently-submitted jobs (the engine is
         # multi-tenant: the SQL surface, streams, and bench submit from
         # many threads; FIFO would head-of-line-block behind big stages).
@@ -171,19 +168,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
     )
-    # Pool declarations (vrod_build, the weighted FAIR pool the session-
-    # shared snapshot builders can OPT INTO via VROD_BUILD_POOL — see
-    # conf/fairscheduler.xml and queries._shared_cached; nothing selects
-    # it by default). Undeclared pools keep Spark's defaults, so the file
-    # changes nothing for ordinary query jobs. Only set when the file
-    # actually exists: an explicitly-configured missing allocation file
-    # fails SparkContext start, whereas omitting the conf just leaves
-    # every pool at default.
-    alloc = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "conf", "fairscheduler.xml"
-    )
-    if os.path.exists(alloc):
-        builder = builder.config("spark.scheduler.allocation.file", alloc)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
