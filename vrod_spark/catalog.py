@@ -400,38 +400,68 @@ class Collection:
         the internal ``bucket`` partition column is projected away here so
         the logical schema is stable across REINDEX.
 
+        The layout (flat, ``bucket=`` or ``pk=``) is sniffed from the
+        version dir, never taken from meta: a historical snapshot may
+        predate or postdate a REINDEX / repartition, and a killed REINDEX
+        leaves index meta over a flat current snapshot. Every layout is
+        read with an explicit schema, so no read runs a schema-inference
+        job.
+
         ``spark`` overrides the session the plan is built on (Engine.sql
         uses a private child session so its temp views stay isolated)."""
         s = spark or self.db.spark
         meta = self.meta
-        field_names = [
-            f.name for f in StructType.fromDDL(meta["schema"]).fields
-        ]
-        target = self.version_dir(version)
-        if version is not None:
-            target = self._require_version_dir(version)
-            # A historical snapshot may predate or postdate a REINDEX /
-            # repartition, so its on-disk layout (plain vs partitioned) can
-            # differ from what current meta suggests — sniff, don't trust.
-            entries = os.listdir(target)
-            if any(e.startswith("bucket=") for e in entries):
-                return s.read.parquet(target).select(*field_names)
-            if any(e.startswith("pk=") for e in entries):
+        target = (
+            self.version_dir() if version is None
+            else self._require_version_dir(version)
+        )
+        entries = os.listdir(target)
+        for part_col, part_type in (("bucket", "int"), ("pk", "string")):
+            if any(e.startswith(part_col + "=") for e in entries):
+                field_names = [
+                    f.name for f in StructType.fromDDL(meta["schema"]).fields
+                ]
                 return (
-                    s.read.schema(meta["schema"] + ", pk string")
+                    s.read.schema(f"{meta['schema']}, {part_col} {part_type}")
                     .parquet(target)
                     .select(*field_names)
                 )
-            return s.read.schema(meta["schema"]).parquet(target)
-        if self.live_index(meta):
-            return s.read.parquet(target).select(*field_names)
-        if meta.get("partition_by"):
-            return (
-                s.read.schema(meta["schema"] + ", pk string")
-                .parquet(target)
-                .select(*field_names)
-            )
         return s.read.schema(meta["schema"]).parquet(target)
+
+    def read_buckets(
+        self, version: int, buckets, *, columns: str | None = None
+    ) -> DataFrame:
+        """The rows of bucket-partitioned snapshot ``version`` that lie in
+        ``buckets``, listing and scanning ONLY those ``bucket=<b>`` dirs:
+        planning is O(probed buckets), not O(2^n_planes), and no job
+        infers the schema (it is given: the record schema, the physical
+        ``columns`` DDL a searcher needs, e.g. ivfpq's ``pq_code binary``,
+        and ``bucket int``). The ``bucket IN (...)`` filter stays, so the
+        plan still shows the PartitionFilters.
+
+        A probed bucket with no directory (``candidate_buckets`` falls back
+        to the query's own, possibly empty, bucket) is skipped; when none
+        remain the result is an empty, correctly-typed DataFrame."""
+        from pyspark.sql import functions as F
+
+        s = self.db.spark
+        root = self.version_dir(version)
+        schema = ", ".join(
+            p for p in (self.meta["schema"], columns, "bucket int") if p
+        )
+        buckets = sorted({int(b) for b in buckets})
+        paths = [
+            p for p in (os.path.join(root, f"bucket={b}") for b in buckets)
+            if os.path.isdir(p)
+        ]
+        if not paths:
+            return s.createDataFrame([], schema)
+        return (
+            s.read.schema(schema)
+            .option("basePath", root)
+            .parquet(*paths)
+            .filter(F.col("bucket").isin(buckets))
+        )
 
     def read_delta(self, since_version: int) -> DataFrame:
         """Rows added since ``since_version`` — the incremental-export
@@ -642,7 +672,13 @@ class Collection:
             from vrod_spark.errors import CommitConflictError
 
             obs = Observation()
-            df = self.db.spark.read.parquet(cur)  # bucket/pq_code cols included
+            # The physical columns too: pq/ivfpq codes, the bucket dirs.
+            physical = [self.meta["schema"]]
+            if idx.get("kind") in ("pq", "ivfpq"):
+                physical.append("pq_code binary")
+            if idx.get("kind") != "pq":
+                physical.append("bucket int")
+            df = self.db.spark.read.schema(", ".join(physical)).parquet(cur)
             df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
             staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
             try:
@@ -1207,7 +1243,7 @@ class Collection:
 
         for attempt in range(retries + 1):
             base = self.version
-            df = self.read()
+            df = self.read(base)
             unknown = set(assignments) - set(df.columns)
             if unknown:
                 from vrod_spark.errors import CommandArgError
@@ -1266,7 +1302,7 @@ class Collection:
         for attempt in range(retries + 1):
             base = self.version
             n_before = self._footer_rowcount(self.version_dir(base))
-            df = self.read()
+            df = self.read(base)
             pred = F.expr(predicate)
             try:
                 n_after = self._rewrite(

@@ -1134,14 +1134,19 @@ class Engine:
             raise DimensionMismatchError(
                 f"query vector dimension {len(vector)} != collection dimension {declared}"
             )
-        df = col.read(version)
-        if where:
-            df = df.filter(F.expr(where))
+
+        def scan() -> DataFrame:
+            # The exact and range paths scan the whole (prefiltered)
+            # snapshot; the index searchers list only their probed buckets,
+            # so this plan is built only where it is used.
+            df = col.read(version)
+            return df.filter(F.expr(where)) if where else df
+
         if within is not None:
             from vrod_spark.operators.knn import range_search
 
             result = range_search(
-                df,
+                scan(),
                 vector,
                 float(within),
                 vec_col="embedding",
@@ -1176,7 +1181,7 @@ class Engine:
                 result = ann_search_bucketed(col, vector, k, snapshot=snapshot, **opts)
             return CommandResult("SEARCHSIMILAR", df=result)
         result = knn_exact(
-            df,
+            scan(),
             vector,
             k,
             vec_col="embedding",

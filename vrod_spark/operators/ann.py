@@ -10,13 +10,15 @@ physically bucket-partitioned rewrite:
   (pure ``zip_with``/``aggregate`` expressions, JVM-side), and rewrite the
   snapshot ``partitionBy("bucket")``. Plane matrix + per-bucket histogram
   go into collection meta. At 100 TB the rewrite is one distributed job,
-  and afterwards *partition pruning* means a query touches only matching
-  bucket directories — the scan cost drops from O(N) to O(N / 2^planes ×
-  probes).
+  and afterwards a query touches only matching bucket directories — the
+  scan cost drops from O(N) to O(N / 2^planes × probes).
 - **SEARCH**: compute the query's bucket driver-side, pick candidate
   buckets in increasing Hamming distance until the histogram says we have
   ≥ ``candidate_factor × k`` candidate rows, then exact-score only those
-  buckets (filter → partition pruning → TakeOrderedAndProject).
+  buckets. The query lists and scans only its probed ``bucket=`` dirs
+  (``Collection.read_buckets``, schema given): planning is O(probes), not
+  O(2^planes), and the search is one Spark job (scan →
+  TakeOrderedAndProject).
 
 This is engine-level routing, not a Catalyst extension (SURVEY §4.2: the
 planner stays stock).
@@ -214,16 +216,14 @@ def ann_search_bucketed(
     collection, vector: list[float], k: int, *, candidate_factor: int = 8,
     snapshot: tuple | None = None,
 ) -> DataFrame:
-    """LSH fast path: prune to candidate buckets, exact-score, top-k.
-    Scans ``snapshot`` = ``(version, meta, live index)``
-    (``Collection.snapshot()``, the current one by default), which must
-    carry a live sign-LSH index."""
+    """LSH fast path: prune to candidate buckets, exact-score, top-k,
+    reading only those buckets' dirs of ``snapshot`` =
+    ``(version, meta, live index)`` (``Collection.snapshot()``, the
+    current one by default), which must carry a live sign-LSH index."""
     version, meta, index_meta = snapshot or collection.snapshot()
     buckets = candidate_buckets(index_meta, vector, k, candidate_factor)
-    df = collection.db.spark.read.parquet(collection.version_dir(version))
-    df = df.filter(F.col("bucket").isin(buckets))  # → partition pruning
     return knn_exact(
-        df,
+        collection.read_buckets(version, buckets),
         vector,
         k,
         vec_col="embedding",

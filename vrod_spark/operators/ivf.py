@@ -13,8 +13,9 @@ Build (offline, one distributed pass + tiny driver-side k-means):
 
 Search: rank centroids by distance to the query driver-side, take
 buckets until the histogram covers ``candidate_factor × k`` rows
-(monotone recall knob, exact in the limit), then partition-pruned
-exact scoring.
+(monotone recall knob, exact in the limit), then exact scoring. The
+query lists and scans only its probed ``bucket=`` dirs
+(``Collection.read_buckets``), never the whole snapshot.
 
 IVF vs sign-LSH: IVF adapts to the data distribution (centroids land
 where vectors are), so on clustered corpora it prunes far better; LSH is
@@ -227,16 +228,14 @@ def ivf_search(
     collection, vector: list[float], k: int, *, candidate_factor: int = 8,
     snapshot: tuple | None = None,
 ) -> DataFrame:
-    """Probe nearest centroids (partition-pruned scan) then exact-score.
-    Scans ``snapshot`` = ``(version, meta, live index)``
+    """Probe nearest centroids, then exact-score only their bucket dirs of
+    ``snapshot`` = ``(version, meta, live index)``
     (``Collection.snapshot()``, the current one by default), which must
     carry a live IVF index."""
     version, meta, index_meta = snapshot or collection.snapshot()
     buckets = ivf_candidate_buckets(index_meta, vector, k, candidate_factor)
-    df = collection.db.spark.read.parquet(collection.version_dir(version))
-    df = df.filter(F.col("bucket").isin(buckets))
     return knn_exact(
-        df,
+        collection.read_buckets(version, buckets),
         vector,
         k,
         vec_col="embedding",

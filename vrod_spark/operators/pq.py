@@ -743,8 +743,9 @@ def pq_collection_search(
 
     1. ivfpq only — occupancy-aware bucket probing (reuses
        ``ivf_candidate_buckets``: skips empty buckets, expands until the
-       probed buckets cover the ADC candidate budget) over the
-       ``bucket=`` partition layout → the scan is partition-PRUNED;
+       probed buckets cover the ADC candidate budget); only the probed
+       ``bucket=`` dirs are listed and scanned (``Collection.read_buckets``),
+       for the ADC phase and the rescore pool alike;
     2. ADC over (id, pq_code) — parquet column pruning means the float
        vectors are NOT read in this phase;
     3. bounded exact rescore: broadcast-join the ``k * rescore_factor``
@@ -770,16 +771,20 @@ def pq_collection_search(
     rotation = (
         np.asarray(idx["rotation"], dtype=np.float64) if idx.get("rotation") else None
     )
-    spark = collection.db.spark
-    raw = spark.read.parquet(collection.version_dir(version))
-    cand = raw
     if idx["kind"] == "ivfpq":
         from vrod_spark.operators.ivf import ivf_candidate_buckets
 
         buckets = ivf_candidate_buckets(
             idx, vector, k, candidate_factor=max(rescore_factor, 4)
         )
-        cand = cand.filter(F.col("bucket").isin(buckets))
+        # Every ADC survivor lies in a probed bucket, so the rescore pool
+        # below is read from the same pruned scan.
+        raw = collection.read_buckets(version, buckets, columns="pq_code binary")
+    else:
+        raw = collection.db.spark.read.schema(
+            meta["schema"] + ", pq_code binary"
+        ).parquet(collection.version_dir(version))
+    cand = raw
     if prefilter:
         cand = cand.filter(F.expr(prefilter))
     n_adc = max(k * rescore_factor, k)
