@@ -3439,3 +3439,106 @@ def test_indexed_search_and_bucketed_update_run_one_spark_job(engine, spark):
     assert _jobs_for(spark, "g-upd", lambda: engine.execute(
         "UPDATE", collection="v", arg={"where": "id = 1", "set": {"payload": "'b'"}}
     )) == 1
+
+
+def _bucket_layout(version_dir: str) -> dict[str, list[int]]:
+    """``{bucket: ids}`` read straight from each ``bucket=`` dir, which must
+    hold exactly one data file, written in id order."""
+    import pyarrow.parquet as pq
+
+    layout = {}
+    for entry in os.listdir(version_dir):
+        if not entry.startswith("bucket="):
+            continue
+        bdir = os.path.join(version_dir, entry)
+        files = [f for f in os.listdir(bdir) if not f.startswith(("_", "."))]
+        assert len(files) == 1, f"{entry} holds {len(files)} data files"
+        ids = pq.read_table(os.path.join(bdir, files[0]), columns=["id"])["id"]
+        layout[entry.split("=", 1)[1]] = ids.to_pylist()
+    assert all(ids == sorted(ids) for ids in layout.values())
+    return layout
+
+
+def _ids_by_bucket(df) -> dict[str, list[int]]:
+    """``{bucket: sorted ids}`` by a groupBy over ``df``'s bucket column."""
+    return {
+        str(r["bucket"]): r["ids"]
+        for r in df.groupBy("bucket")
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .collect()
+    }
+
+
+@pytest.mark.parametrize("case", ["sign_lsh", "ivf", "ivfpq", "compact"])
+def test_bucketed_rewrite_layout_and_task_budget(engine, spark, monkeypatch, case):
+    """Every bucket-partitioned rewrite (REINDEX sign-LSH / ivf / ivfpq and
+    COMPACT of an LSH-indexed snapshot with delta files) writes one file
+    per bucket dir holding exactly the rows the stored bucket assignment
+    puts there, keeps the index histogram, and runs its write job in at
+    most ``spark.sql.shuffle.partitions`` tasks — not one task per bucket
+    (256 for 8 planes)."""
+    import uuid
+
+    import numpy as np
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from vrod_spark.operators.ann import bucket_expr
+
+    sc = spark.sparkContext
+    budget = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    engine.execute("CREATE", collection="v", arg={"dimension": 8})
+    _insert_vectors(engine, np.random.default_rng(0).standard_normal((2000, 8)))
+    col = engine.db.collection("v")
+    flat = col.read()
+    if case == "compact":
+        engine.execute("REINDEX", collection="v", arg={"n_planes": 8})
+        for i in range(3):
+            _insert_vectors(engine, np.random.default_rng(i + 1).standard_normal((5, 8)),
+                            first_id=10_000 + 10 * i)
+        before = _ids_by_bucket(spark.read.parquet(col.version_dir()))
+        hist_before = col.meta["index"]["histogram"]
+    arg = {
+        "sign_lsh": {"n_planes": 8},
+        "ivf": {"kind": "ivf", "n_centroids": 16},
+        "ivfpq": {"kind": "ivfpq", "n_centroids": 16, "m": 4},
+    }.get(case)
+
+    # The write job of each bucketed parquet write: the last job the write
+    # ran (AQE materializes the shuffle in an earlier job, which the write
+    # job then lists as a skipped stage — one that completed no task).
+    write_tasks = []
+    original = DataFrameWriter.parquet
+
+    def counted(self, path, *a, **kw):
+        group = f"g-write-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = original(self, path, *a, **kw)
+        finally:
+            sc.setJobGroup("outside", "outside")
+        if any(e.startswith("bucket=") for e in os.listdir(path)):
+            st = sc.statusTracker()
+            job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+            stages = [st.getStageInfo(s) for s in job.stageIds]
+            write_tasks.append(
+                sum(s.numTasks for s in stages if s.numCompletedTasks > 0))
+        return out
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted)
+    if case == "compact":
+        col.compact()
+    else:
+        engine.execute("REINDEX", collection="v", arg=arg)
+    monkeypatch.undo()
+
+    assert len(write_tasks) == 1 and 0 < write_tasks[0] <= budget, write_tasks
+    idx = col.live_index()
+    layout = _bucket_layout(col.version_dir())
+    assert layout == _ids_by_bucket(spark.read.parquet(col.version_dir()))
+    assert idx["histogram"] == {b: len(ids) for b, ids in layout.items()}
+    if case == "compact":
+        assert layout == before and idx["histogram"] == hist_before
+    elif case == "sign_lsh":
+        planes = np.asarray(idx["planes"])
+        assert layout == _ids_by_bucket(
+            flat.withColumn("bucket", bucket_expr("embedding", planes)))

@@ -169,3 +169,44 @@ def test_worker_probe_records_anomalies(monkeypatch):
     outcomes = {(a["query"], a["outcome"]) for a in anomalies}
     assert outcomes == {("flaky", "retried"), ("dead", "failed")}
     assert all("synthetic query failure" in a["error"] for a in anomalies)
+
+
+def test_stage_profile_reduces_stage_completed_events(tmp_path, capsys):
+    """tools/stage_profile.py folds each StageCompleted event's accumulables
+    into one JSON line (ns CPU counters to ms), skips other events and an
+    in-progress log's partly written last line, and reads a rolling
+    ``eventlog_v2_*`` dir."""
+    import json
+
+    sys.path.insert(0, REPO)
+    from tools.stage_profile import main
+
+    def acc(name, value):
+        return {"ID": 1, "Name": f"internal.metrics.{name}", "Value": value}
+
+    stage = {"Event": "SparkListenerStageCompleted", "Stage Info": {
+        "Stage ID": 3, "Stage Attempt ID": 0, "Stage Name": "parquet at x:0",
+        "Number of Tasks": 256, "Accumulables": [
+            acc("executorRunTime", 3100),
+            acc("executorCpuTime", 2_400_000_000),
+            acc("executorDeserializeCpuTime", "6500000000"),
+            acc("jvmGCTime", 42),
+            acc("shuffle.write.writeTime", 1_500_000),
+        ]}}
+    log = tmp_path / "eventlog_v2_local-1"
+    log.mkdir()
+    (log / "appstatus_local-1.inprogress").write_text("")
+    (log / "events_1_local-1").write_text("\n".join([
+        json.dumps({"Event": "SparkListenerLogStart", "Spark Version": "4.1.2"}),
+        json.dumps(stage),
+        '{"Event": "SparkListenerJobEnd", "Job',
+    ]) + "\n")
+
+    assert main([str(tmp_path)]) == 0
+    rows = [json.loads(line) for line in capsys.readouterr().out.splitlines()]
+    assert rows == [{
+        "stage": 3, "attempt": 0, "name": "parquet at x:0", "tasks": 256,
+        "failed": False, "executorRunTime_ms": 3100, "executorCpuTime_ms": 2400.0,
+        "executorDeserializeCpuTime_ms": 6500.0, "jvmGCTime_ms": 42,
+        "shuffleWriteTime_ms": 1.5,
+    }]

@@ -692,22 +692,8 @@ class Collection:
                         .parquet(staging)
                     )
                 else:
-                    # Roughly one task per known bucket (hash
-                    # partitioning) when the histogram is available (r17,
-                    # the ann.py reindex rationale): AQE otherwise
-                    # coalesces the post-shuffle partitions and a single
-                    # task writes every partition file serially.
-                    n_buckets = len(idx.get("histogram") or {})
-                    (
-                        (
-                            df.repartition(n_buckets, "bucket")
-                            if n_buckets
-                            else df.repartition("bucket")
-                        )
-                        .sortWithinPartitions("bucket", "id")
-                        .write.partitionBy("bucket")
-                        .mode("overwrite")
-                        .parquet(staging)
+                    self.write_bucketed(
+                        df, staging, len(idx.get("histogram") or {})
                     )
                 n = int(obs.get["rows"])
                 with self._commit_lock():
@@ -937,6 +923,32 @@ class Collection:
                     continue
                 n += pq.ParquetFile(os.path.join(r, fname)).metadata.num_rows
         return n
+
+    @staticmethod
+    def write_bucketed(df: DataFrame, path: str, n_buckets: int) -> None:
+        """Write ``df`` ``partitionBy("bucket")`` to ``path``: one file per
+        bucket dir, rows ordered by id — the layout every index rewrite
+        (sign-LSH, IVF, IVF-PQ, COMPACT of an indexed snapshot) commits.
+
+        Sizing rule: ``min(n_buckets, shuffle.partitions)`` hash-partitioned
+        write tasks (``shuffle.partitions`` when ``n_buckets`` is unknown),
+        so each bucket still lands whole in ONE task and the count is sized
+        to the session, not to the key space. Every task pays a fixed cost
+        whether or not it has rows — measured ~26 ms of CPU just to
+        deserialize its task binary (20k×64 vectors, 256 buckets, 4 cores:
+        256 write tasks spent 6.3-6.7 CPU-s deserializing against 2.7-4.7
+        CPU-s of work, and about 1/e of them were empty; PERF.md). The count
+        stays EXPLICIT: AQE does not coalesce a ``repartition(n, col)``,
+        whereas a keyless ``repartition("bucket")`` was coalesced to 1-2
+        tasks that wrote every bucket file serially."""
+        n_tasks = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        (
+            df.repartition(min(n_buckets, n_tasks) or n_tasks, "bucket")
+            .sortWithinPartitions("bucket", "id")
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .parquet(path)
+        )
 
     @staticmethod
     def bucket_histogram(root: str) -> dict[str, int]:

@@ -3,9 +3,11 @@
 These are the scoring kernels behind SEARCHSIMILAR (reference command:
 /root/reference/src/command/builder.rs:68-72) expressed as built-in
 higher-order array functions (``zip_with`` + ``aggregate``), so scoring
-runs JVM-side inside whole-stage codegen — no Python boundary, no UDF
-serialization, and the expressions scale linearly with partition count
-on a real cluster.
+runs JVM-side — no Python boundary, no UDF serialization, and the
+expressions scale linearly with partition count on a real cluster. Both
+are CodegenFallback expressions in Spark 4.1: they run interpreted inside
+the generated stage (an unrolled form that compiles measured slower;
+PERF.md).
 
 All kernels cast elements to DOUBLE up front: the storage type is
 ARRAY<FLOAT> (FIXTURES.md `embeddings.embedding`) and float32 → float64

@@ -8,7 +8,9 @@ physically bucket-partitioned rewrite:
 - **REINDEX**: draw ``n_planes`` deterministic hyperplanes (seeded numpy),
   compute each record's bucket = sign-bit pattern of its projections
   (pure ``zip_with``/``aggregate`` expressions, JVM-side), and rewrite the
-  snapshot ``partitionBy("bucket")``. Plane matrix + per-bucket histogram
+  snapshot ``partitionBy("bucket")`` — one file per bucket dir, written by
+  ``min(2^planes, spark.sql.shuffle.partitions)`` tasks
+  (``Collection.write_bucketed``). Plane matrix + per-bucket histogram
   go into collection meta. At 100 TB the rewrite is one distributed job,
   and afterwards a query touches only matching bucket directories — the
   scan cost drops from O(N) to O(N / 2^planes × probes).
@@ -60,7 +62,10 @@ def bucket_expr(vec_col: str, planes: np.ndarray) -> Column:
     aggregate lambdas + a 64-element literal array each) cost ~100 ms of
     py4j round-trips per table on the driver — pure cold-plan floor. The
     parsed tree is the identical Catalyst expression (differential-tested
-    against the Column form), still pure codegen at runtime."""
+    against the Column form). At runtime it is evaluated JVM-side but
+    interpreted: ``aggregate`` and ``zip_with`` are CodegenFallback
+    expressions inside the generated stage (an unrolled codegen form
+    measured slower; PERF.md)."""
     from vrod_spark.functions.vector import vector_lit_sql
 
     terms = []
@@ -93,8 +98,13 @@ def reindex_collection(collection, *, n_planes: int = DEFAULT_PLANES, seed: int 
     """Fit LSH planes, rewrite the snapshot bucket-partitioned into a
     STAGING dir, then commit through the locked conflict-checked tail
     (`Collection.commit_staged_index` — r11 review: the unlocked commit
-    could silently drop a concurrent INSERT). The histogram comes from
-    the staged files' parquet footers, not a second scan."""
+    could silently drop a concurrent INSERT). The staging write is
+    `Collection.write_bucketed`: one file per bucket dir, partition
+    pruning serves bucket scans, and its task count follows the session
+    (``min(2^n_planes, shuffle.partitions)``), not the bucket count.
+    Installations with huge per-bucket volumes raise ``n_planes`` (scan
+    cost is O(N / 2^planes), so buckets stay bounded). The histogram
+    comes from the staged files' parquet footers, not a second scan."""
     import os
     import shutil
     import uuid
@@ -111,26 +121,7 @@ def reindex_collection(collection, *, n_planes: int = DEFAULT_PLANES, seed: int 
 
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
-        # Cluster rows physically by bucket; partitionBy gives one
-        # directory per bucket → partition pruning serves bucket scans.
-        # Explicit numPartitions = 2^n_planes (r17): a keyless
-        # repartition("bucket") lets AQE coalesce the tiny post-shuffle
-        # partitions into one or two tasks, which then write all
-        # 2^n_planes partition files SEQUENTIALLY — measured 4.4-5.2 s vs
-        # 1.4-1.8 s for the pinned count at sf0.1/local[32], identical 256
-        # files (guide §2.6 idle capacity). repartition(n, "bucket") HASH
-        # partitions, so that is roughly one task per bucket, not exactly
-        # one: hash collisions put two buckets in one task and leave
-        # another task empty. Installations with huge per-bucket volumes
-        # raise n_planes (scan cost is O(N / 2^planes), so buckets stay
-        # bounded).
-        (
-            df.repartition(1 << n_planes, "bucket")
-            .sortWithinPartitions("bucket", "id")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(staging)
-        )
+        collection.write_bucketed(df, staging, 1 << n_planes)
         histogram = collection.bucket_histogram(staging)
         if not histogram:
             # Zero rows: an empty bucketed snapshot is unreadable (no

@@ -155,17 +155,7 @@ def reindex_ivf(
 
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
-        (
-            # Roughly one task per centroid bucket (hash partitioning;
-            # r17, the ann.py rationale): AQE otherwise coalesces the tiny
-            # post-shuffle partitions and one task writes every partition
-            # file sequentially.
-            bucketed.repartition(len(centroids), "bucket")
-            .sortWithinPartitions("bucket", "id")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(staging)
-        )
+        collection.write_bucketed(bucketed, staging, len(centroids))
         histogram = collection.bucket_histogram(staging)
         index_meta = {
             "kind": "ivf",

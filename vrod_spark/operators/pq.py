@@ -685,15 +685,7 @@ def reindex_ivfpq(
 
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
-        (
-            # Roughly one task per centroid bucket (hash partitioning;
-            # r17, the ann.py rationale).
-            enc.repartition(len(centroids), "bucket")
-            .sortWithinPartitions("bucket", "id")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(staging)
-        )
+        collection.write_bucketed(enc, staging, len(centroids))
         histogram = collection.bucket_histogram(staging)
         collection.commit_staged_index(
             staging,
