@@ -1121,6 +1121,86 @@ def test_insert_conflicts_with_concurrent_reindex(engine, spark, sf_dir, monkeyp
     assert col.meta["index"] is not None
 
 
+def test_empty_reindex_does_not_clobber_concurrent_index(engine, monkeypatch):
+    """A REINDEX that finds no rows commits nothing and writes no meta.
+    Its "no rows" branch used to clear the index with an unlocked,
+    unchecked meta write after its staging write — so an INSERT + REINDEX
+    committing meanwhile lost its index."""
+    from vrod_spark.catalog import Collection
+
+    engine.execute("CREATE", collection="er", arg={"dimension": 2})
+    col = engine.db.collection("er")
+    real_write = Collection.write_bucketed
+    state = {"raced": False}
+
+    def racing_write(df, path, n_buckets):
+        real_write(df, path, n_buckets)
+        if not state["raced"]:
+            state["raced"] = True
+            engine.execute(
+                "INSERT", collection="er",
+                arg=[{"id": i, "embedding": [float(i), 1.0], "payload": "p"}
+                     for i in range(4)],
+            )
+            engine.execute("REINDEX", collection="er",
+                           arg={"kind": "sign_lsh", "n_planes": 2})
+
+    monkeypatch.setattr(Collection, "write_bucketed", staticmethod(racing_write))
+    info = engine.execute("REINDEX", collection="er",
+                          arg={"kind": "sign_lsh", "n_planes": 2}).info
+    assert state["raced"]
+    assert info["indexed"] is False and info["reason"] == "no rows"
+    assert col.live_index() is not None, "empty REINDEX wiped a live index"
+    hit = engine.execute("SEARCHSIMILAR", collection="er",
+                         arg={"vector": [3.0, 1.0], "k": 1}).df.collect()
+    assert [r["id"] for r in hit] == [3]
+
+
+@pytest.mark.parametrize("debris", ["orphan_stamp", "truncated"])
+def test_indexed_compact_restamps_its_own_index(engine, monkeypatch, debris):
+    """An indexed COMPACT's layout is the index it read when it started,
+    so that is the index it re-stamps. A REINDEX killed during the
+    COMPACT's write leaves stale index meta (other planes, a stamp that
+    never commits); TRUNCATEWAL may clear it before the COMPACT commits.
+    Re-stamping the meta found under the lock would trust the debris'
+    planes over the compacted layout, or drop the index."""
+    from vrod_spark.catalog import Collection, _index_identity
+
+    engine.execute("CREATE", collection="cp", arg={"dimension": 2})
+    engine.execute(
+        "INSERT", collection="cp",
+        arg=[{"id": i, "embedding": [float(i % 7) - 3.0, float(i % 5) - 2.0],
+              "payload": "p"} for i in range(40)],
+    )
+    engine.execute("REINDEX", collection="cp",
+                   arg={"kind": "sign_lsh", "n_planes": 3})
+    col = engine.db.collection("cp")
+    idx = col.live_index()
+    real_write = Collection.write_bucketed
+
+    def write_then_leave_debris(df, path, n_buckets):
+        real_write(df, path, n_buckets)
+        orphan = col.version + 1
+        os.makedirs(col.version_dir(orphan))
+        col.update_meta(index={**idx, "planes": [[0.0, 1.0]] * 3,
+                               "version": orphan})
+        assert col.live_index() is None
+        if debris == "truncated":
+            col.truncate_wal()
+            assert col.meta.get("index") is None
+
+    monkeypatch.setattr(Collection, "write_bucketed",
+                        staticmethod(write_then_leave_debris))
+    assert col.compact()["rows"] == 40
+    live = col.live_index()
+    assert live is not None and live["version"] == col.version
+    assert _index_identity(live) == _index_identity(idx)
+    assert live["histogram"] == idx["histogram"]
+    hit = engine.execute("SEARCHSIMILAR", collection="cp",
+                         arg={"vector": [3.0, 2.0], "k": 1}).df.collect()
+    assert [r["id"] for r in hit] == [34]
+
+
 def test_engine_sql_interleaved_isolation(spark, tmp_path):
     """Two engines each holding a collection named `t` with different
     contents: interleaved sql() calls must resolve their OWN snapshot —

@@ -21,6 +21,10 @@ via ``os._exit`` at each window of the locked commit tail:
   committed, so window C must degrade to exact search and flat appends
   until REINDEX re-runs (or TRUNCATEWAL clears the debris).
 
+Indexed COMPACT (window B at ``_commit``; window C at the post-swap index
+re-stamp, ``update_meta``) and the hard-link RESTORE (window B) are killed
+the same way, each after an unpatched setup step in the same process.
+
 A fresh process then verifies: the pre-crash rows read back exactly,
 HISTORY shows no phantom commit, the same mutation re-runs cleanly on
 top of the debris, and for REINDEX the search surface stays correct
@@ -95,6 +99,37 @@ else:
             eng.execute("REINDEX", collection="c", arg={"kind": "sign_lsh",
                                                         "n_planes": 4})
         os._exit(8)  # the command must not survive its own kill window
+    elif op == "compact" and window:
+        # Setup (unpatched): an indexed snapshot to compact.
+        eng.execute("REINDEX", collection="c", arg={"kind": "sign_lsh",
+                                                    "n_planes": 4})
+        if window == "B":  # before the pointer swap
+            C.Collection._commit = lambda self, *a, **k: os._exit(7)
+        else:  # window C: at the post-swap index re-stamp
+            C.Collection.update_meta = lambda self, **k: os._exit(7)
+        eng.db.collection("c").compact()
+        os._exit(8)
+    elif op == "restore" and window:
+        # Setup (unpatched): a later version to roll back from.
+        eng.execute("DELETE", collection="c", arg="id >= 9")
+        C.Collection._commit = lambda self, *a, **k: os._exit(7)
+        eng.execute("RESTORE", collection="c", arg={"version": 1})
+        os._exit(8)
+    elif phase == "verify_compact":
+        col = eng.db.collection("c")
+        rows = sorted(r["id"] for r in col.read().collect())
+        ops = [r["op"] for r in eng.execute("HISTORY", collection="c").df.collect()]
+        print("VERIFY", repr((rows, ops, col.live_index() is not None,
+                              search_ids(eng))), flush=True)
+    elif phase == "verify_restore":
+        col = eng.db.collection("c")
+        rows = sorted(r["id"] for r in col.read().collect())
+        ops = [r["op"] for r in eng.execute("HISTORY", collection="c").df.collect()]
+        n = eng.execute("RESTORE", collection="c",
+                        arg={"version": 1}).info["rows"]
+        rows2 = sorted(r["id"] for r in col.read().collect())
+        ops2 = [r["op"] for r in eng.execute("HISTORY", collection="c").df.collect()]
+        print("VERIFY", repr((rows, ops, n, rows2, ops2)), flush=True)
     elif phase == "verify_rewrite":
         col = eng.db.collection("c")
         rows = sorted((r["id"], r["payload"]) for r in col.read().collect())
@@ -243,6 +278,9 @@ SCENARIOS: dict[str, tuple[list[str], str]] = {
     "truncate_heals": (["reindex-C"], "verify_truncate_heals"),
     "export": (["export_kill"], "verify_export_kill"),
     "truncate_kill": (["reindex-C", "truncate_kill"], "verify_truncate_kill"),
+    "compact-B": (["compact-B"], "verify_compact"),
+    "compact-C": (["compact-C"], "verify_compact"),
+    "restore-B": (["restore-B"], "verify_restore"),
 }
 
 
@@ -265,7 +303,8 @@ def crash_results(tmp_path_factory):
         except BaseException as e:  # re-raised in the owning test
             return ("err", e)
 
-    with ThreadPoolExecutor(max_workers=len(SCENARIOS)) as pool:
+    # Each chain holds one JVM at a time; cap how many run at once.
+    with ThreadPoolExecutor(max_workers=min(len(SCENARIOS), 8)) as pool:
         futs = {name: pool.submit(one, name) for name in SCENARIOS}
         return {name: f.result() for name, f in futs.items()}
 
@@ -345,3 +384,29 @@ def test_truncate_heals_meta_before_reclaiming_orphans(crash_results):
     # post-crash: inserts commit and a re-run TRUNCATEWAL finishes the
     # reclaim (only the new current survives).
     assert n2 == 13 and n_vdirs2 == 1
+
+
+@pytest.mark.parametrize("window", ["B", "C"])
+def test_indexed_compact_crash_keeps_index_live(crash_results, window):
+    """Kill an indexed COMPACT at the pointer swap (B) or at the post-swap
+    index re-stamp (C). Either way the index must stay live: before the
+    swap the stamp still names the committed REINDEX version (a re-stamp
+    moved before the swap would name the never-committed COMPACT version
+    and read as no index); after it, the old stamp is committed and older
+    than CURRENT."""
+    rows, ops, live, ids = _result(crash_results, f"compact-{window}")
+    assert rows == list(range(12)), f"{window}: rows corrupted: {rows}"
+    assert "REINDEX" in ops
+    assert ("COMPACT" in ops) == (window == "C"), f"{window}: history {ops}"
+    assert live, f"{window}: index no longer live after a killed COMPACT"
+    assert ids == [4, 5, 6], f"{window}: indexed search broken: {ids}"
+
+
+def test_restore_crash_commits_nothing_and_reruns(crash_results):
+    """Kill a hard-link RESTORE at the pointer swap: the orphan version
+    dir it linked must not read as a RESTORE, and a re-run commits."""
+    rows, ops, n, rows2, ops2 = _result(crash_results, "restore-B")
+    assert rows == list(range(9)), f"killed RESTORE leaked: {rows}"
+    assert "RESTORE" not in ops, f"phantom RESTORE in history: {ops}"
+    assert n == 12 and rows2 == list(range(12))
+    assert ops2.count("RESTORE") == 1

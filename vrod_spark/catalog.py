@@ -21,6 +21,15 @@ Maps the reference's data model (SURVEY.md §1) onto a Spark-native layout:
   old-or-new, never partial. Unreferenced versions are garbage: reclaimed
   by `truncate_wal` (the reference's TRUNCATEWAL, builder.rs:39-42).
 
+  Every such commit (INSERT, UPDATE/DELETE/UPSERT/DEDUP, REINDEX,
+  COMPACT, RESTORE) runs ONE tail, `Collection._commit_snapshot`: the
+  heavy write job fills a `.staging-<uuid>` dir (`staging_dir`) with no
+  lock held; then, under `_commit_lock`, the commit re-checks what must
+  still hold, allocates `v<N>` (`_next_version_dir`), fills it (rename
+  the staging dir, or hard-link a base version and move the staged delta
+  in), writes the index meta (`update_meta`) and swaps the pointer
+  (`_commit`).
+
   **Scale note:** INSERT-type mutations do NOT rewrite existing data —
   prior snapshot files are hard-linked into the new version and only the
   delta is written (O(delta) commit, like an Iceberg snapshot reusing
@@ -37,6 +46,7 @@ import re
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -340,17 +350,18 @@ class Collection:
         """The index dict consumers may TRUST for snapshot ``version`` (the
         CURRENT one by default), or None.
 
-        ``meta['index']`` alone is not proof the index is live: REINDEX's
-        commit tail writes the index meta BEFORE the _CURRENT pointer
-        swap (commit_staged_index), so a writer killed between the two
-        leaves index meta pointing at an orphaned (never-committed,
+        ``meta['index']`` alone is not proof the index is live: the commit
+        tail (`_commit_snapshot`) writes a REINDEX's index meta BEFORE the
+        _CURRENT pointer swap, so a writer killed between the two leaves
+        index meta pointing at an orphaned (never-committed,
         possibly-partial) bucketed snapshot while the live snapshot is
         still the previous flat layout. Trusting it then wedges searches
         (no ``bucket`` column) and — worse — lets INSERT bucket-assign a
         delta and merge it into a flat snapshot (silent mixed-layout
-        corruption; r14 kill-test). commit_staged_index therefore stamps
-        the index with the version it committed as, and an index is LIVE
-        only when that stamp is a PROVABLY-committed version. An orphan's
+        corruption; r14 kill-test). The tail therefore stamps a replaced
+        index with the version it commits as (and COMPACT re-stamps only
+        AFTER its swap), and an index is LIVE only when that stamp is a
+        PROVABLY-committed version. An orphan's
         number is never committed (later writers skip over its dir), so
         stale index meta is permanently inert — readers fall back to the
         exact paths until a REINDEX re-runs or TRUNCATEWAL clears it.
@@ -669,8 +680,6 @@ class Collection:
                 out["files_per_partition"] = per_part
             return out
         if idx:
-            from vrod_spark.errors import CommitConflictError
-
             obs = Observation()
             # The physical columns too: pq/ivfpq codes, the bucket dirs.
             physical = [self.meta["schema"]]
@@ -680,8 +689,7 @@ class Collection:
                 physical.append("bucket int")
             df = self.db.spark.read.schema(", ".join(physical)).parquet(cur)
             df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
-            try:
+            with self.staging_dir() as staging:
                 if idx.get("kind") == "pq":
                     # Flat PQ layout: compact file count, keep the stored
                     # pq_code column (no re-encode — maintenance must never
@@ -696,25 +704,11 @@ class Collection:
                         df, staging, len(idx.get("histogram") or {})
                     )
                 n = int(obs.get["rows"])
-                with self._commit_lock():
-                    if self.version != base_version:
-                        raise CommitConflictError(
-                            f"COMPACT derived from v{base_version} but CURRENT "
-                            f"is v{self.version}; re-run"
-                        )
-                    nxt, nxt_dir = self._next_version_dir()
-                    os.rename(staging, nxt_dir)
-                    self._commit(nxt, "COMPACT", {"rows": n, "index": "preserved"})
-                    # Re-stamp AFTER the pointer swap (opposite order to
-                    # commit_staged_index, deliberately): a crash before
-                    # this line leaves the OLD stamp, which is still a
-                    # committed version — index stays live, nothing
-                    # degrades. The re-stamp only restores live_index's
-                    # fast path (stamp == current) after compaction.
-                    self.update_meta(index={**idx, "version": nxt})
-            except Exception:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
+                self._commit_snapshot(
+                    "COMPACT", {"rows": n, "index": "preserved"},
+                    staging=staging, base_version=base_version,
+                    index=idx, stamp_after_swap=True,
+                )
         else:
             n = self._rewrite(
                 self.read(version=base_version).coalesce(int(target_partitions)),
@@ -754,7 +748,6 @@ class Collection:
         Single-node scope is honest here: the catalog IS a local
         filesystem; a cluster deployment swaps this one method for a
         metastore/commit-service call."""
-        from contextlib import contextmanager
 
         @contextmanager
         def lock():
@@ -832,6 +825,107 @@ class Collection:
         with open(os.path.join(self.path, WAL), "a") as f:
             f.write(json.dumps(entry) + "\n")
 
+    @contextmanager
+    def staging_dir(self):
+        """A fresh ``.staging-<uuid>`` path under the collection for a
+        commit's write job, which runs with no lock held. Removed on exit:
+        a committed one was already renamed or emptied into its version,
+        and any other is debris. A killed writer's staging dir is reclaimed
+        by TRUNCATEWAL once it is an hour old."""
+        path = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
+        try:
+            yield path
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
+
+    def _commit_snapshot(
+        self,
+        op: str,
+        detail: dict,
+        *,
+        index,
+        staging: str | None = None,
+        base_version: int | None = None,
+        check=None,
+        link: int | str | None = None,
+        grow: dict[str, int] | None = None,
+        stamp_after_swap: bool = False,
+    ) -> int | None:
+        """The commit tail of every copy-on-write mutation. Under
+        `_commit_lock`: check the commit still holds, allocate the next
+        version (`_next_version_dir`), fill it, write the index meta
+        (`update_meta`), swap the pointer and log ``op`` with ``detail``
+        (`_commit`). Returns the committed version.
+
+        Still holds: CURRENT is ``base_version`` (a write derived from it
+        must not swap past a newer commit and drop its rows); then
+        ``check(meta)``, over the meta read under the lock, raises to
+        refuse or returns False to decline (nothing committed, None).
+
+        The version holds ``staging`` renamed whole; or, with ``link`` (a
+        version, or "current" re-resolved under the lock), that version's
+        files hard-linked plus ``staging``'s moved in (`_move_delta`).
+
+        The index is: ``None`` — cleared before the swap; ``"keep"`` —
+        left as the lock found it, its histogram grown by ``grow`` (the
+        moved delta's rows per bucket) when given; a dict — replaced and
+        stamped with the new version, before the swap (a crash in between
+        leaves a never-committed stamp, which `live_index` refuses) or,
+        with ``stamp_after_swap``, after it (the new version keeps the
+        dict's layout, so a crash in between leaves its old, committed
+        stamp live; the write also replaces any stale meta a killed
+        REINDEX left meanwhile).
+
+        ``staging`` is removed on every failure path; a partly built
+        version dir on any error before `_commit`, never after (the
+        pointer may already name it)."""
+        from vrod_spark.errors import CommitConflictError
+
+        try:
+            with self._commit_lock() as beat:
+                meta = self.meta
+                if base_version is not None and self.version != base_version:
+                    raise CommitConflictError(
+                        f"{op} derived from v{base_version} but CURRENT is "
+                        f"v{self.version}; re-run against the new snapshot"
+                    )
+                if check is not None and check(meta) is False:
+                    return None
+                idx = meta.get("index")
+                nxt, nxt_dir = self._next_version_dir()
+                try:
+                    if link is None:
+                        os.rename(staging, nxt_dir)
+                    else:
+                        os.makedirs(nxt_dir)
+                        src = self.version_dir(None if link == "current" else link)
+                        self._link_existing(src, nxt_dir, heartbeat=beat)
+                        if staging is not None:
+                            self._move_delta(staging, nxt_dir, nxt)
+                    if index is None and idx:
+                        self.update_meta(index=None)
+                    elif isinstance(index, dict) and not stamp_after_swap:
+                        self.update_meta(index={**index, "version": nxt})
+                    elif grow and idx:
+                        hist = {
+                            str(k): int(v)
+                            for k, v in (idx.get("histogram") or {}).items()
+                        }
+                        for b, cnt in grow.items():
+                            hist[b] = hist.get(b, 0) + cnt
+                        self.update_meta(index={**idx, "histogram": hist})
+                except Exception:
+                    shutil.rmtree(nxt_dir, ignore_errors=True)
+                    raise
+                self._commit(nxt, op, detail)
+                if isinstance(index, dict) and stamp_after_swap:
+                    self.update_meta(index={**index, "version": nxt})
+                return nxt
+        except Exception:
+            if staging is not None:
+                shutil.rmtree(staging, ignore_errors=True)
+            raise
+
     def _link_existing(self, src_dir: str, dst_dir: str, heartbeat=None) -> int:
         """Hard-link the prior snapshot's data files into the new version —
         O(1) per file, no data copy. Recurses into ``bucket=`` partition
@@ -886,29 +980,20 @@ class Collection:
         return bucket_expr("embedding", np.asarray(idx["planes"], dtype=np.float64))
 
     @staticmethod
-    def _merge_partitioned_delta(
-        staging: str, nxt_dir: str, nxt: int, prefix: str = "bucket="
-    ) -> dict[str, int]:
-        """Move staged ``<prefix>K/`` delta files into the new version's
-        matching partition dirs (``d{nxt}-`` prefixed, collision-free) and
-        return per-partition added-row counts — read driver-side from
-        parquet footers (pyarrow), zero Spark jobs, O(delta files)."""
-        import pyarrow.parquet as pq
-
-        added: dict[str, int] = {}
-        for entry in os.listdir(staging):
-            if not entry.startswith(prefix):
-                continue
-            bucket = entry.split("=", 1)[1]
-            dst = os.path.join(nxt_dir, entry)
+    def _move_delta(staging: str, nxt_dir: str, nxt: int) -> None:
+        """Move a staged delta's data files into the new version — flat
+        or under the matching ``bucket=``/``pk=`` partition dirs —
+        ``d{nxt}-`` prefixed so they never collide with linked ones."""
+        for dirpath, dirs, files in os.walk(staging):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            dst = os.path.join(nxt_dir, os.path.relpath(dirpath, staging))
             os.makedirs(dst, exist_ok=True)
-            for fname in os.listdir(os.path.join(staging, entry)):
-                if fname.startswith(("_", ".")):
-                    continue
-                src = os.path.join(staging, entry, fname)
-                added[bucket] = added.get(bucket, 0) + pq.ParquetFile(src).metadata.num_rows
-                os.rename(src, os.path.join(dst, f"d{nxt}-{fname}"))
-        return added
+            for fname in files:
+                if not fname.startswith(("_", ".")):
+                    os.rename(
+                        os.path.join(dirpath, fname),
+                        os.path.join(dst, f"d{nxt}-{fname}"),
+                    )
 
     @staticmethod
     def _footer_rowcount(root: str) -> int:
@@ -954,9 +1039,8 @@ class Collection:
     def bucket_histogram(root: str) -> dict[str, int]:
         """Per-bucket row counts of a ``bucket=``-partitioned snapshot,
         read from parquet FOOTERS — driver-side, O(files), zero Spark
-        jobs (the `_merge_partitioned_delta` technique). Replaces the
-        full second scan REINDEX used to pay just to build its
-        histogram (r11 review)."""
+        jobs. REINDEX builds its histogram with it instead of a full
+        second scan; INSERT counts its delta's rows per bucket with it."""
         import pyarrow.parquet as pq
 
         hist: dict[str, int] = {}
@@ -982,38 +1066,15 @@ class Collection:
         index: dict | None,
         op_detail: dict,
     ) -> int:
-        """Locked commit tail for REINDEX-class rewrites (r11 review —
-        the four index builders committed with neither the lock nor a
-        conflict check, so a concurrent INSERT's rows could silently
-        vanish under the re-pointed snapshot): verify no commit
-        superseded ``base_version``, rename the STAGED snapshot into the
-        next version dir, persist the index meta, and swap the pointer —
-        the same read-modify-write contract as `_rewrite`. The heavy
-        write job happens into ``staging`` before this call, outside the
-        lock. On conflict the staging dir is reclaimed and
-        CommitConflictError asks the caller to re-run against the new
-        snapshot."""
-        from vrod_spark.errors import CommitConflictError
-
-        with self._commit_lock():
-            if self.version != base_version:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise CommitConflictError(
-                    f"REINDEX derived from v{base_version} but CURRENT is "
-                    f"v{self.version}; re-run against the new snapshot"
-                )
-            nxt, nxt_dir = self._next_version_dir()
-            os.rename(staging, nxt_dir)
-            # Stamp the index with ITS commit's version: the meta write
-            # below lands before the pointer swap in _commit, so a crash
-            # between the two leaves index meta without a committed
-            # snapshot — live_index() treats a stamp that never became a
-            # committed version as no-index (see its docstring).
-            if index is not None:
-                index = {**index, "version": nxt}
-            self.update_meta(index=index)
-            self._commit(nxt, "REINDEX", op_detail)
-            return nxt
+        """REINDEX's commit: the index rewrite written into ``staging``
+        (by the caller, outside the lock) becomes the next version with
+        ``index`` stamped to it, if no commit superseded ``base_version``
+        — else CommitConflictError, and the caller re-runs against the new
+        snapshot (`_commit_snapshot`)."""
+        return self._commit_snapshot(
+            "REINDEX", op_detail, staging=staging, base_version=base_version,
+            index=index,
+        )
 
     # -- mutations (each: write new snapshot → atomic pointer swap) --------
     def insert(self, df: DataFrame, *, commit_detail: dict | None = None) -> int:
@@ -1093,13 +1154,12 @@ class Collection:
                     ),
                 )
 
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite")
         if bucketed:
             writer = writer.partitionBy("bucket")
         elif part_key:
             writer = writer.partitionBy("pk")
-        try:
+        with self.staging_dir() as staging:
             writer.parquet(staging)  # the ONE job; metrics ride along
             vals = obs.get
             n_new = int(vals["n"])
@@ -1114,8 +1174,9 @@ class Collection:
             # Plain appends commute, so concurrent INSERTs need no conflict
             # check — but everything staged against a SNAPSHOT OF META must
             # be re-validated INSIDE the commit lock (ADVICE r2):
-            # - CURRENT re-resolves (else two racing inserts link the same
-            #   base and the later swap silently drops the earlier delta);
+            # - CURRENT re-resolves (link="current"; else two racing inserts
+            #   link the same base and the later swap silently drops the
+            #   earlier delta);
             # - the index identity must still be the one the delta was
             #   bucket-assigned with (a concurrent REINDEX means our bucket=
             #   dirs hash wrong; a concurrent UPDATE/DELETE/DEDUP cleared
@@ -1123,10 +1184,9 @@ class Collection:
             #   it / produce a mixed flat+partitioned tree);
             # - the declared-dimension check-and-pin is serialized here so
             #   two racing first-inserts can't both pin different dims.
-            with self._commit_lock() as beat:
-                fresh_meta = self.meta
-                if fresh_meta.get("partition_by") != part_key or _index_identity(
-                    self.live_index(fresh_meta)
+            def still_valid(meta: dict) -> bool:
+                if meta.get("partition_by") != part_key or _index_identity(
+                    self.live_index(meta)
                 ) != _index_identity(idx):
                     from vrod_spark.errors import CommitConflictError
 
@@ -1136,53 +1196,32 @@ class Collection:
                         "new snapshot"
                     )
                 if dmin is not None:
-                    declared = fresh_meta.get("dimension")
+                    declared = meta.get("dimension")
                     if declared is None:
                         self.update_meta(dimension=dmin)
                     elif dmin != declared:
                         raise DimensionMismatchError(
                             f"vector dimension {dmin} != collection dimension {declared}"
                         )
-                cur_dir = self.version_dir()
-                nxt, nxt_dir = self._next_version_dir()
-                os.makedirs(nxt_dir)
-                self._link_existing(cur_dir, nxt_dir, heartbeat=beat)
-                if bucketed:
-                    added = self._merge_partitioned_delta(staging, nxt_dir, nxt)
-                    # Identity matched above, so only the histogram can have
-                    # moved (concurrent inserts grow it commutatively).
-                    fresh_idx = fresh_meta.get("index")
-                    hist = {
-                        str(k): int(v)
-                        for k, v in (fresh_idx.get("histogram") or {}).items()
-                    }
-                    for b, cnt in added.items():
-                        hist[b] = hist.get(b, 0) + cnt
-                    self.update_meta(index={**fresh_idx, "histogram": hist})
-                    detail = {
-                        "rows": n_new,
-                        "index": "maintained",
-                        "delta_buckets": len(added),
-                    }
-                elif part_key:
-                    added = self._merge_partitioned_delta(
-                        staging, nxt_dir, nxt, prefix="pk="
-                    )
-                    detail = {"rows": n_new, "delta_partitions": len(added)}
-                else:
-                    for fname in os.listdir(staging):
-                        if fname.startswith(("_", ".")):
-                            continue
-                        # Prefix delta files so they can never collide with
-                        # linked ones.
-                        os.rename(
-                            os.path.join(staging, fname),
-                            os.path.join(nxt_dir, f"d{nxt}-{fname}"),
-                        )
-                    detail = {"rows": n_new}
-                self._commit(nxt, "INSERT", {**detail, **(commit_detail or {})})
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+                return True
+
+            detail = {"rows": n_new}
+            grow = None
+            if bucketed:
+                # Rows per delta bucket, from footers before the lock; the
+                # tail grows the histogram it finds under the lock by them
+                # (concurrent inserts grow it commutatively).
+                grow = self.bucket_histogram(staging)
+                detail.update(index="maintained", delta_buckets=len(grow))
+            elif part_key:
+                detail["delta_partitions"] = sum(
+                    e.startswith("pk=") for e in os.listdir(staging)
+                )
+            self._commit_snapshot(
+                "INSERT", {**detail, **(commit_detail or {})},
+                staging=staging, check=still_valid, link="current",
+                index="keep", grow=grow,
+            )
         return n_new
 
     def _rewrite(self, df: DataFrame, op: str, detail: dict | None = None,
@@ -1195,16 +1234,13 @@ class Collection:
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        from vrod_spark.errors import CommitConflictError
-
         if base_version is None:
             base_version = self.version
         if observation is None:
             observation = Observation()
             df = df.observe(observation, F.count(F.lit(1)).alias("rows"))
         part_key = self.meta.get("partition_by")
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex}")
-        try:
+        with self.staging_dir() as staging:
             if part_key:
                 # Preserve the meta-key partition layout across rewrites;
                 # pk is re-derived (UPDATE may move rows across partitions).
@@ -1218,24 +1254,14 @@ class Collection:
                 df.write.mode("overwrite").parquet(staging)
             n = int(observation.get["rows"])
             # Read-modify-write: the long Spark job above ran unlocked, so
-            # a concurrent commit may have superseded the snapshot this
-            # rewrite derived from. Detect it under the lock and refuse —
-            # silently swapping the pointer would DROP that commit's rows.
-            with self._commit_lock():
-                if self.version != base_version:
-                    raise CommitConflictError(
-                        f"{op} derived from v{base_version} but CURRENT is "
-                        f"v{self.version}; re-read and retry"
-                    )
-                nxt, nxt_dir = self._next_version_dir()
-                os.rename(staging, nxt_dir)
-                if self.meta.get("index"):
-                    self.update_meta(index=None)
-                self._commit(nxt, op, {**(detail or {}), "rows": n})
-            return n
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
+            # the commit refuses (CommitConflictError) if a concurrent
+            # commit superseded base_version — swapping past it would DROP
+            # that commit's rows.
+            self._commit_snapshot(
+                op, {**(detail or {}), "rows": n}, staging=staging,
+                base_version=base_version, index=None,
+            )
+        return n
 
     def update(self, predicate: str, assignments: dict[str, str],
                *, retries: int = 3) -> int:
@@ -1353,8 +1379,6 @@ class Collection:
         Any CURRENT index is cleared either way — the same contract as
         UPDATE/DELETE: content changed, REINDEX re-derives. Returns the
         restored row count."""
-        import pyarrow.parquet as pq
-
         from vrod_spark.errors import CommandArgError, CommitConflictError
 
         version = int(version)
@@ -1378,55 +1402,43 @@ class Collection:
                 "possibly-partial content"
             )
         entries = os.listdir(src)
-        part_key = self.meta.get("partition_by")
         bucketed = any(e.startswith("bucket=") for e in entries)
         pk_laid = any(e.startswith("pk=") for e in entries)
-        linkable = not bucketed and (pk_laid == bool(part_key))
-        if linkable:
+
+        def linkable(meta: dict) -> bool:
+            return not bucketed and pk_laid == bool(meta.get("partition_by"))
+
+        def still_linkable(meta: dict) -> bool:
+            # Re-check under the lock: a racing commit may have moved
+            # CURRENT onto the target (restore would then be a no-op
+            # duplicate) — refuse, same shape as the rewrite conflict.
+            if version == self.version:
+                raise CommitConflictError(
+                    f"concurrent commit moved {self.name} to "
+                    f"v{version} while RESTORE was preparing"
+                )
+            # Re-derive linkability from the FRESH meta (r11 advice): a
+            # racing commit before lock acquisition can change the layout
+            # conventions (first-insert pinning partition_by, or a
+            # REINDEX) — a linked snapshot would then contradict the meta
+            # that current-version read() trusts. The src dir is
+            # immutable, so bucketed/pk_laid stand; only the meta moves.
+            return linkable(meta)
+
+        if linkable(self.meta):
             # Count rows from the SOURCE dir's parquet footers before
             # taking the lock: the dir is immutable and the links will
             # share its inodes, but footer reads are open+read per file —
             # O(files) I/O that must not sit inside the commit lock's
-            # stale-breaker budget (the locked tail below is link+swap
+            # stale-breaker budget (the locked tail is link+swap
             # metadata ops only).
             n = self._footer_rowcount(src)
-            linked = False
-            with self._commit_lock() as beat:
-                # Re-check under the lock: a racing commit may have moved
-                # CURRENT onto the target (restore would then be a no-op
-                # duplicate) — refuse, same shape as the rewrite conflict.
-                if version == self.version:
-                    raise CommitConflictError(
-                        f"concurrent commit moved {self.name} to "
-                        f"v{version} while RESTORE was preparing"
-                    )
-                # Re-derive linkability from a FRESH meta read under the
-                # lock (r11 advice): a racing commit between the check
-                # above and lock acquisition can change the layout
-                # conventions (first-insert pinning partition_by, or a
-                # REINDEX) — a linked snapshot would then contradict the
-                # meta that current-version read() trusts. The src dir is
-                # immutable, so bucketed/pk_laid stand; only the meta
-                # side can move.
-                if not bucketed and pk_laid == bool(
-                    self.meta.get("partition_by")
-                ):
-                    nxt, nxt_dir = self._next_version_dir()
-                    os.makedirs(nxt_dir)
-                    try:
-                        self._link_existing(src, nxt_dir, heartbeat=beat)
-                    except Exception:
-                        shutil.rmtree(nxt_dir, ignore_errors=True)
-                        raise
-                    if self.meta.get("index"):
-                        self.update_meta(index=None)
-                    self._commit(
-                        nxt, "RESTORE", {"restored_from": version, "rows": n}
-                    )
-                    linked = True
-            if linked:
+            if self._commit_snapshot(
+                "RESTORE", {"restored_from": version, "rows": n},
+                check=still_linkable, link=version, index=None,
+            ) is not None:
                 return n
-            # fell through: conventions moved under us — take the
+            # declined: conventions moved under us — take the
             # re-materialize path below, which reads the logical rows and
             # writes them through the CURRENT conventions.
         # Layout mismatch (historical bucket= index layout, or a

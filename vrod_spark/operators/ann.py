@@ -105,29 +105,22 @@ def reindex_collection(collection, *, n_planes: int = DEFAULT_PLANES, seed: int 
     Installations with huge per-bucket volumes raise ``n_planes`` (scan
     cost is O(N / 2^planes), so buckets stay bounded). The histogram
     comes from the staged files' parquet footers, not a second scan."""
-    import os
-    import shutil
-    import uuid
-
     meta = collection.meta
     dimension = meta.get("dimension")
     if dimension is None:
-        # Empty / dim-less collection: nothing to index yet.
-        collection.update_meta(index=None)
+        # Empty / dim-less collection: nothing to index yet, and no index
+        # to clear (a snapshot without vectors never carries one).
         return {"collection": collection.name, "indexed": False, "reason": "no vectors"}
     base = collection.version
     planes = _planes(dimension, n_planes, seed)
-    df = collection.read().withColumn("bucket", bucket_expr("embedding", planes))
+    df = collection.read(base).withColumn("bucket", bucket_expr("embedding", planes))
 
-    staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
-    try:
+    with collection.staging_dir() as staging:
         collection.write_bucketed(df, staging, 1 << n_planes)
         histogram = collection.bucket_histogram(staging)
         if not histogram:
             # Zero rows: an empty bucketed snapshot is unreadable (no
             # partition dirs to infer from) — declare nothing to index.
-            shutil.rmtree(staging, ignore_errors=True)
-            collection.update_meta(index=None)
             return {
                 "collection": collection.name,
                 "indexed": False,
@@ -145,9 +138,6 @@ def reindex_collection(collection, *, n_planes: int = DEFAULT_PLANES, seed: int 
             },
             op_detail={"n_planes": n_planes, "buckets": len(histogram)},
         )
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
     return {
         "collection": collection.name,
         "indexed": True,

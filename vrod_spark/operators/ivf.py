@@ -112,7 +112,6 @@ def reindex_ivf(
     the index meta; the matrix regenerates deterministically."""
     meta = collection.meta
     if meta.get("dimension") is None:
-        collection.update_meta(index=None)
         return {"collection": collection.name, "indexed": False, "reason": "no vectors"}
 
     proj = None
@@ -124,7 +123,7 @@ def reindex_ivf(
         )
 
     base = collection.version
-    df = collection.read()
+    df = collection.read(base)
     # Deterministic bounded sample (xxhash64-smallest rows — a pure
     # function of the data): ``df.sample`` seeds per PARTITION, so the
     # trained centroids — and search recall — would vary with the
@@ -139,7 +138,6 @@ def reindex_ivf(
         # Zero-row snapshot (e.g. everything deleted since the dimension
         # was pinned): k-means on an empty sample is a numpy AxisError —
         # declare nothing to index instead (r11 review).
-        collection.update_meta(index=None)
         return {"collection": collection.name, "indexed": False, "reason": "no rows"}
     sample = np.array([r["v"] for r in sample_rows], dtype=np.float64)
     if proj is not None:
@@ -149,12 +147,7 @@ def reindex_ivf(
     bucketed = df.withColumn(
         "bucket", ivf_assign_expr(df.sparkSession, centroids, "embedding", proj=proj)
     )
-    import os
-    import shutil
-    import uuid
-
-    staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
-    try:
+    with collection.staging_dir() as staging:
         collection.write_bucketed(bucketed, staging, len(centroids))
         histogram = collection.bucket_histogram(staging)
         index_meta = {
@@ -173,9 +166,6 @@ def reindex_ivf(
             index=index_meta,
             op_detail={"kind": "ivf", "buckets": len(histogram)},
         )
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
     return {
         "collection": collection.name,
         "indexed": True,

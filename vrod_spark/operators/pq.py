@@ -532,12 +532,11 @@ def reindex_pq(
     touched until the bounded exact rescore."""
     meta = collection.meta
     if meta.get("dimension") is None:
-        collection.update_meta(index=None)
         return {"collection": collection.name, "indexed": False, "reason": "no vectors"}
     import numpy as np
 
     base = collection.version
-    df = collection.read()
+    df = collection.read(base)
     rows = (
         df.select(F.col("embedding").alias("v"))
         .orderBy(F.xxhash64(F.col("v").cast("array<float>")))
@@ -547,7 +546,6 @@ def reindex_pq(
     if not rows:
         # Zero-row snapshot: nothing to train on — consistent with the
         # other index kinds' "no rows" no-op (r11 review).
-        collection.update_meta(index=None)
         return {"collection": collection.name, "indexed": False, "reason": "no rows"}
     xs = np.asarray([r["v"] for r in rows], dtype=np.float64)
     rotation = opq_rotation(xs, m) if opq else None
@@ -557,12 +555,7 @@ def reindex_pq(
         "pq_code",
         pq_code_expr(collection.db.spark, codebooks, "embedding", rotation=rotation),
     )
-    import os
-    import shutil
-    import uuid
-
-    staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
-    try:
+    with collection.staging_dir() as staging:
         encoded.write.mode("overwrite").parquet(staging)
         collection.commit_staged_index(
             staging,
@@ -581,9 +574,6 @@ def reindex_pq(
             },
             op_detail={"kind": "pq"},
         )
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
     return {"collection": collection.name, "indexed": True, "kind": "pq", "opq": bool(opq)}
 
 
@@ -634,10 +624,9 @@ def reindex_ivfpq(
         )
     meta = collection.meta
     if meta.get("dimension") is None:
-        collection.update_meta(index=None)
         return {"collection": collection.name, "indexed": False, "reason": "no vectors"}
     base = collection.version
-    df = collection.read()
+    df = collection.read(base)
     # ONE bounded DETERMINISTIC sample (the xxhash64 subset rule of
     # pq_train — a pure function of the data, independent of file order
     # and partitioning) trains BOTH quantizers. ``df.sample`` would seed
@@ -650,7 +639,6 @@ def reindex_ivfpq(
         .collect()
     )
     if not rows:
-        collection.update_meta(index=None)
         return {"collection": collection.name, "indexed": False, "reason": "no rows"}
     xs = np.asarray([r["v"] for r in rows], dtype=np.float64)
     centroids = _spherical_kmeans(xs[:train_sample], n_centroids, seed=seed)
@@ -679,12 +667,7 @@ def reindex_ivfpq(
         enc = enc.withColumn(
             "pq_code", pq_code_expr(spark, codebooks, "embedding", rotation=rotation)
         )
-    import os
-    import shutil
-    import uuid
-
-    staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
-    try:
+    with collection.staging_dir() as staging:
         collection.write_bucketed(enc, staging, len(centroids))
         histogram = collection.bucket_histogram(staging)
         collection.commit_staged_index(
@@ -708,9 +691,6 @@ def reindex_ivfpq(
             },
             op_detail={"kind": "ivfpq", "buckets": len(histogram)},
         )
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
     return {
         "collection": collection.name,
         "indexed": True,

@@ -84,7 +84,9 @@ def bm25_rank(
         )
     # Per-document term frequencies as ARRAY EXPRESSIONS — the query
     # term set is small and fixed, so tf(t, d) = size(filter(toks, = t))
-    # stays inside whole-stage codegen; no explode, no postings shuffle.
+    # is a per-row expression: no explode, no postings shuffle. ``filter``
+    # (ArrayFilter) is CodegenFallback in Spark 4.1, so each tf column is
+    # evaluated interpreted inside the generated stage.
     def _is_term(term: str):
         # Closure factory, NOT a default arg: PySpark infers higher-order
         # lambda arity from the signature, and a second parameter would
