@@ -42,7 +42,7 @@ from concurrent.futures import ThreadPoolExecutor
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from vrod_spark.queries import QUERIES, RAW_QUERIES  # noqa: E402
-from vrod_spark.session import get_spark  # noqa: E402
+from vrod_spark.session import get_spark, jvm_counters  # noqa: E402
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -343,6 +343,18 @@ def _emit(walls, timings, names, sf_val, mode, workers, serial_queries, final,
     )
 
 
+def _emit_jvm_counters(spark, phase: str) -> None:
+    """One ``jvm_counters`` record (JIT, GC, code cache, JVM CPU) at the
+    end of a phase. Printed before that phase's headline, which stays the
+    last line; a failed read costs the record, never the run."""
+    try:
+        counters = jvm_counters(spark)
+    except Exception as exc:  # noqa: BLE001 — evidence over purity
+        counters = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+    print(json.dumps({"metric": "jvm_counters", "phase": phase, **counters}),
+          flush=True)
+
+
 def main() -> None:
     serial = "--serial" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -463,6 +475,7 @@ def _run_suite(serial, sf_dir, sf_val, t0, over_deadline, names, only,
     mode = "serial" if serial else "concurrent"
     spark = get_spark("vrod-spark-bench")
     _warmup(spark, sf_dir)
+    _emit_jvm_counters(spark, "warmup")
     if not serial:
         # Longest-processing-time-first submission: the suite's makespan is
         # bounded below by the slowest query, and LPT keeps the long poles
@@ -548,6 +561,7 @@ def _run_suite(serial, sf_dir, sf_val, t0, over_deadline, names, only,
         for item in enumerate(names):
             run_one(item)
         walls.append(round(time.perf_counter() - suite_start, 3))
+        _emit_jvm_counters(spark, "pass1")
     else:
         # Best-of-N (default 2): the concurrent suite saturates every core
         # for its whole window, so a host-side CPU-steal episode inflates
@@ -572,6 +586,8 @@ def _run_suite(serial, sf_dir, sf_val, t0, over_deadline, names, only,
             if best is None or walls[-1] == min(walls):
                 best = dict(timings)
             best_holder["best"] = best
+            if rep == 0:
+                _emit_jvm_counters(spark, "pass1")
             # Evidence checkpoint: a parseable record exists from the first
             # completed pass onward, whatever happens later.
             _emit(walls, best, names, sf_val, mode, workers, {}, final=False)

@@ -184,3 +184,19 @@ def test_parse_driver_mem_tolerant(capsys):
     parse_driver_mem(None)
     parse_driver_mem("")
     assert capsys.readouterr().err == ""
+
+
+def test_jvm_counters_records_precede_the_headline(bench_runs):
+    """bench.py reports the driver JVM's own JIT/GC/code-cache counters
+    once after warm-up and once after pass 1, as one-line records; the
+    compact headline stays the last line."""
+    lines = [ln for ln in bench_runs["heap"].stdout.strip().splitlines() if ln.strip()]
+    records = [json.loads(ln) for ln in lines if ln.startswith("{")]
+    counters = [r for r in records if r["metric"] == "jvm_counters"]
+    assert [r["phase"] for r in counters] == ["warmup", "pass1"]
+    warm, pass1 = counters
+    assert set(warm) == {"metric", "phase", "compile_ms", "gc_ms", "gc_count",
+                         "used_mb", "peak_mb", "jvm_cpu_s"}
+    for key in ("compile_ms", "gc_count", "peak_mb", "jvm_cpu_s"):
+        assert pass1[key] >= warm[key], key
+    assert records[-1]["metric"] == "headline_suite_wall_clock"

@@ -7,7 +7,8 @@ DuckDB oracles under deliberately perturbed environments, each in a
 FRESH subprocess (JVM options and thread-pool env only bind at session
 launch): master local[1]/local[4], shuffle.partitions 1/7/200,
 single-threaded BLAS, a Turkish JVM locale (the classic upper/lowercase
-trap), small Arrow batches (different pandas_udf batch shapes), and
+trap), HotSpot's full tiered JIT (C2) in place of the factory's C1-only
+driver, small Arrow batches (different pandas_udf batch shapes), and
 Arrow disabled entirely (the driver's session — the r11 NaN episode).
 
 Any FAIL here reproduces the driver's red row and names the trigger.
@@ -76,6 +77,13 @@ CONFIGS: list[tuple[str, dict]] = [
                         "MKL_NUM_THREADS": "1"})),
     ("locale_tr", dict(extra={
         "spark.driver.extraJavaOptions": "-Duser.language=tr -Duser.country=TR",
+    })),
+    # get_spark's driver JVM compiles with C1 only; cluster executors and
+    # deployments that override it run HotSpot's full tiered JIT (C2).
+    # extraJavaOptions follow the factory's defaultJavaOptions, and the
+    # JVM takes the last value, so this config runs the gates under C2.
+    ("c2_tiered", dict(extra={
+        "spark.driver.extraJavaOptions": "-XX:TieredStopAtLevel=4",
     })),
     ("arrow1k", dict(extra={
         "spark.sql.execution.arrow.maxRecordsPerBatch": "1000",

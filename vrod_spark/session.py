@@ -4,7 +4,9 @@ Defaults are sized for local[N] testing but every knob is the one that
 matters on a real cluster too: AQE for runtime re-planning (skew joins,
 partition coalescing), Arrow for the Python boundary, UTC session time
 zone so results are oracle-comparable, and shuffle partitions matched to
-parallelism instead of the legacy 200.
+parallelism instead of the legacy 200. The one driver-only knob is the JIT
+policy: the driver JVM compiles with C1 only (see ``get_spark``), while
+executors keep HotSpot's full tiered compiler.
 """
 
 from __future__ import annotations
@@ -160,9 +162,31 @@ def get_spark(
         # corrupts any stdout-JSON consumer. Route JVM warnings to stderr;
         # only effective for sessions that launch the JVM (i.e. always in
         # practice — the factory is the engine's entry point).
+        #
+        # The driver JVM compiles with C1 only (TieredStopAtLevel=1). The
+        # driver's work is planning, codegen and thousands of short-lived
+        # generated classes, and in local mode the same JVM runs every
+        # task. C2 never pays that back: on 4 vCPUs (local[4]) its compiler
+        # threads used 45-49 CPU-s of a perfbench ingest_mutate run and
+        # 59-67 CPU-s of an analytics_suite run, against 11-21 CPU-s for
+        # every task thread together, and C2's warm passes only beat C1's
+        # after ~30 passes. C1 only, medians of 10 perfbench pairs:
+        # analytics_suite cold_cpu_s 53.9 -> 23.8, setup_s 23.3 -> 12.7
+        # (PERF.md "JIT layer").
+        # TieredStopAtLevel=1 alone shrinks HotSpot's default code cache
+        # from 240 MB to 48 MB, which the query library overflows ("Out of
+        # space in CodeCache for adapters" killed the JVM 40 s into
+        # bench.py at sf0.1; peak use is 66 MB there and 98 MB over a
+        # full tier-1 test run), so the cache is pinned
+        # at 240m. Executors (spark.executor.*) keep the full tiered JIT:
+        # on a cluster they run the long hot loops C2 pays back. Spark
+        # appends spark.driver.extraJavaOptions after these and HotSpot
+        # takes the last value, so a deployment gets C2 back with
+        # -XX:TieredStopAtLevel=4 there.
         .config(
             "spark.driver.defaultJavaOptions",
-            "-Xlog:all=warning:stderr:uptime,level,tags",
+            "-Xlog:all=warning:stderr:uptime,level,tags"
+            " -XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m",
         )
         # List up to 1024 directories on the driver (Spark's default: 32).
         # Every directory the catalog lists is on the driver's own POSIX
@@ -183,3 +207,39 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jvm_counters(spark: SparkSession) -> dict:
+    """The driver JVM's own JIT, GC and CPU counters, read through py4j.
+
+    ``compile_ms`` is the JIT's total compilation time; ``gc_ms`` and
+    ``gc_count`` are summed over every garbage collector. ``used_mb`` and
+    ``peak_mb`` cover the code cache: the ``CodeCache`` pool, or the
+    ``CodeHeap *`` pools of a segmented cache (``peak_mb`` sums the pools'
+    own peaks). ``jvm_cpu_s`` is the JVM process's user + system CPU from
+    ``/proc/<pid>/stat``. All but ``used_mb`` only grow over a session.
+    """
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    gc_ms = gc_count = 0
+    for gc in mf.getGarbageCollectorMXBeans():
+        gc_ms += max(gc.getCollectionTime(), 0)
+        gc_count += max(gc.getCollectionCount(), 0)
+    used = peak = 0
+    for pool in mf.getMemoryPoolMXBeans():
+        name = pool.getName()
+        if name == "CodeCache" or name.startswith("CodeHeap "):
+            used += pool.getUsage().getUsed()
+            peak += pool.getPeakUsage().getUsed()
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    # Fields 14 and 15 of proc(5) (utime, stime): 11 and 12 after the comm.
+    ticks = int(fields[11]) + int(fields[12])
+    return {
+        "compile_ms": int(mf.getCompilationMXBean().getTotalCompilationTime()),
+        "gc_ms": int(gc_ms),
+        "gc_count": int(gc_count),
+        "used_mb": round(used / 2**20, 1),
+        "peak_mb": round(peak / 2**20, 1),
+        "jvm_cpu_s": round(ticks / os.sysconf("SC_CLK_TCK"), 2),
+    }
